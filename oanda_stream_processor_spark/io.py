@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import memo
 from .schemas import FIXTURE_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -23,8 +24,8 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # this saves is the per-call file listing + parquet footer/schema read,
 # which is most of Spark's fixed per-query floor on small inputs
 # (measured 2x on sub-0.3 s queries). Fixture dirs are immutable; a
-# mutated lake would want this cache invalidated on write.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# mutated lake would want this memo invalidated on write.
+_TABLES = memo.register("tables")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -38,9 +39,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # the caller built the session.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        return hit
+    return _TABLES.get_or_build(key, lambda: _read_table(spark, sf_dir, name))
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # events.ts has shipped in two fixture encodings: parquet INT64
         # TIMESTAMP(NANOS) (read as a raw long under nanosAsLong, then
@@ -54,15 +56,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
         ts_type = raw.schema["ts"].dataType
         if isinstance(ts_type, T.LongType):
-            df = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(ts_type, T.TimestampNTZType):
-            df = raw.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-        else:
-            df = raw
-    else:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    _TABLE_CACHE[key] = df
-    return df
+            return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        if isinstance(ts_type, T.TimestampNTZType):
+            return raw.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+        return raw
+    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -50,9 +50,12 @@ north-star LLM-pipeline surface, oracled like every other query.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..io import load_table
 from .similarity import sql_cosine, _cosine
 
@@ -593,7 +596,11 @@ MS_COMMON_P = 0.5
 
 MS_SAMPLE_TARGET = 2048  # adaptive MOD keeps the sample ~this many docs
 
-_GATE_MEMO: dict = {}   # (kind, input-file fingerprint) -> bool | str
+# Every retrieval memo is this one registry entry, keyed (kind, ...):
+# the plan-gate verdicts by (kind, input-file sets), the grading
+# family's frames by (kind, applicationId, sf_dir).
+# memo.bypass("retrieval") turns them all off together.
+_RETRIEVAL = memo.register("retrieval")
 
 
 def _gate_memo_key(kind: str, *frames: DataFrame):
@@ -608,10 +615,10 @@ def _gate_memo_key(kind: str, *frames: DataFrame):
     without input files (in-memory test fixtures, streaming batches)
     return None — the probe runs unmemoized, correct either way; any
     file-set change (a store append, a different fixture dir) changes
-    the key, so staleness is structural, never temporal.  Honors the
-    quality-memo switch (SPARK_GRAFT_QUALITY_MEMO=0 bypasses — the
-    memo-off true-cost bench convention keeps measuring the probe)."""
-    if not _quality_memo_on():
+    the key, so staleness is structural, never temporal.  None under
+    memo.bypass("retrieval") — the memo-off true-cost bench convention
+    keeps measuring the probe."""
+    if not _RETRIEVAL.enabled:
         return None
     files = []
     for f in frames:
@@ -631,8 +638,8 @@ def _gate_memo_key(kind: str, *frames: DataFrame):
 # keys on.  STORE-backed gate kinds only ('*_store'): their frames
 # live under a writable state_dir the engine owns; the text gates
 # read the immutable input fixtures, which must never be written to.
-# SPARK_GRAFT_QUALITY_MEMO=0 bypasses load AND store (key is None),
-# so the bench's memo-off timed region is unchanged.
+# memo.bypass("retrieval") skips load AND store (key is None), so the
+# bench's memo-off timed region is unchanged.
 _GATE_SIDECAR = ".gate_memo.json"
 
 
@@ -679,7 +686,7 @@ def _gate_sidecar_load(key):
             data = json.load(fh)
     except (OSError, ValueError):
         return None
-    row = data.get(key[0])
+    row = data.get(key[0]) if isinstance(data, dict) else None
     if (not isinstance(row, dict)
             or row.get("fp") != _gate_fingerprint(key)):
         return None
@@ -688,19 +695,22 @@ def _gate_sidecar_load(key):
 
 def _gate_sidecar_store(key, verdict) -> None:
     """Best-effort atomic write (read-modify-replace; a read-only
-    store dir or a lost race costs nothing but the next probe)."""
+    store dir or a lost race costs nothing but the next probe).  An
+    unreadable or corrupt old file reads as empty, so the write
+    replaces it instead of leaving persistence off for good."""
     import json
     import os
     path = _gate_sidecar_path(key)
     if path is None:
         return
     try:
+        with open(path) as fh:
+            data = json.load(fh)
+    except (OSError, ValueError):
         data = {}
-        if os.path.isfile(path):
-            with open(path) as fh:
-                data = json.load(fh)
-        if not isinstance(data, dict):
-            data = {}
+    if not isinstance(data, dict):
+        data = {}
+    try:
         data[key[0]] = {"fp": _gate_fingerprint(key),
                         "verdict": verdict}
         with open(path + ".part", "w") as fh:
@@ -710,25 +720,28 @@ def _gate_sidecar_store(key, verdict) -> None:
         pass
 
 
-def _gate_memo_get(key):
-    """In-memory memo, then the store sidecar (warming the memo)."""
-    if key is None:
-        return None
-    hit = _GATE_MEMO.get(key)
-    if hit is None:
-        hit = _gate_sidecar_load(key)
-        if hit is not None:
-            _GATE_MEMO[key] = hit
-    return hit
+def _gate_memo(kind: str):
+    """Memoize a plan-gate probe ``probe(*frames)`` per corpus
+    fingerprint: the in-memory memo, then the store sidecar (warming
+    the memo), then the probe (its verdict persisted to the sidecar)."""
+    def wrap(probe):
+        @functools.wraps(probe)
+        def gate(*frames: DataFrame):
+            key = _gate_memo_key(kind, *frames)
+
+            def build():
+                hit = None if key is None else _gate_sidecar_load(key)
+                if hit is None:
+                    hit = probe(*frames)
+                    if key is not None:
+                        _gate_sidecar_store(key, hit)
+                return hit
+            return _RETRIEVAL.get_or_build(key, build)
+        return gate
+    return wrap
 
 
-def _gate_memo_put(key, verdict) -> None:
-    if key is None:
-        return
-    _GATE_MEMO[key] = verdict
-    _gate_sidecar_store(key, verdict)
-
-
+@_gate_memo("prunable")
 def maxscore_gate_is_prunable(d: DataFrame) -> bool:
     """True iff some query has both a rare and a common term under the
     sampled df-proportion cuts — the q178 plan gate (see block
@@ -744,10 +757,6 @@ def maxscore_gate_is_prunable(d: DataFrame) -> bool:
     layout cannot change the verdict.  Memoized per corpus fingerprint
     (_gate_memo_key — r17): the verdict is a corpus property, so a
     rebuilt query over the same files skips the probe entirely."""
-    key = _gate_memo_key("prunable", d)
-    hit = _gate_memo_get(key)
-    if hit is not None:
-        return hit
     n_docs = d.count()  # parquet row-group metadata, no column read
     if n_docs == 0:
         return False
@@ -766,13 +775,11 @@ def maxscore_gate_is_prunable(d: DataFrame) -> bool:
             return
         pdf = pd.concat(frames, ignore_index=True)
         term_sets = pdf.text.map(
-            lambda t: {x for x in t.split(" ") if x})
+            lambda t: {x for x in (t or "").split(" ") if x})
         yield pd.DataFrame(
             {"sp": [_spread_decision(pdf.doc_id, term_sets, mod)]})
 
-    verdict = bool(pick.mapInPandas(_gate, "sp boolean").first().sp)
-    _gate_memo_put(key, verdict)
-    return verdict
+    return bool(pick.mapInPandas(_gate, "sp boolean").first().sp)
 
 
 def _spread_decision(doc_ids, term_sets, mod: int) -> bool:
@@ -802,6 +809,7 @@ def _spread_decision(doc_ids, term_sets, mod: int) -> bool:
     return False
 
 
+@_gate_memo("prunable_store")
 def maxscore_gate_from_postings(tf: DataFrame, dl: DataFrame) -> bool:
     """The q178 plan gate evaluated over a STORED postings index
     instead of raw text — the served-MaxScore router (r12 verdict ask
@@ -819,10 +827,6 @@ def maxscore_gate_from_postings(tf: DataFrame, dl: DataFrame) -> bool:
     fingerprint (_gate_memo_key — a store append changes the file set
     and hence the key, so the probe re-runs exactly when the corpus
     grew)."""
-    key = _gate_memo_key("prunable_store", tf, dl)
-    hit = _gate_memo_get(key)
-    if hit is not None:
-        return hit
     n_docs = dl.count()
     if n_docs == 0:
         return False
@@ -843,9 +847,7 @@ def maxscore_gate_from_postings(tf: DataFrame, dl: DataFrame) -> bool:
         sets = g.reset_index(drop=True)
         yield pd.DataFrame({"sp": [_spread_decision(ids, sets, mod)]})
 
-    verdict = bool(pick.mapInPandas(_gate, "sp boolean").first().sp)
-    _gate_memo_put(key, verdict)
-    return verdict
+    return bool(pick.mapInPandas(_gate, "sp boolean").first().sp)
 
 
 def term_upper_bounds(dfq: DataFrame, stats: DataFrame,
@@ -1188,6 +1190,7 @@ def _plan_decision(doc_ids, term_counts, mod: int) -> str:
     return "block" if headroom >= BM_HEADROOM else "term"
 
 
+@_gate_memo("plan")
 def maxscore_gate_plan(d: DataFrame) -> str:
     """'flat' | 'term' | 'block' — the q189 plan gate over raw text:
     the q178 sampled-statistic shape verbatim (one metadata count +
@@ -1197,10 +1200,6 @@ def maxscore_gate_plan(d: DataFrame) -> str:
     (plan != 'flat') == the binary gate on any corpus.  Memoized per
     corpus fingerprint (_gate_memo_key — r17, the binary gate's
     convention)."""
-    key = _gate_memo_key("plan", d)
-    hit = _gate_memo_get(key)
-    if hit is not None:
-        return hit
     n_docs = d.count()
     if n_docs == 0:
         return "flat"
@@ -1218,15 +1217,14 @@ def maxscore_gate_plan(d: DataFrame) -> str:
         from collections import Counter
         pdf = pd.concat(frames, ignore_index=True)
         counts = pdf.text.map(
-            lambda t: Counter(x for x in t.split(" ") if x))
+            lambda t: Counter(x for x in (t or "").split(" ") if x))
         yield pd.DataFrame(
             {"plan": [_plan_decision(pdf.doc_id, counts, mod)]})
 
-    verdict = str(pick.mapInPandas(_gate, "plan string").first().plan)
-    _gate_memo_put(key, verdict)
-    return verdict
+    return str(pick.mapInPandas(_gate, "plan string").first().plan)
 
 
+@_gate_memo("plan_store")
 def maxscore_gate_plan_from_postings(tf: DataFrame,
                                      dl: DataFrame) -> str:
     """The q189 plan gate over a STORED postings index — the
@@ -1238,10 +1236,6 @@ def maxscore_gate_plan_from_postings(tf: DataFrame,
     Memoized per store fingerprint (_gate_memo_key — appends change
     the file set, re-running the probe exactly when the corpus
     grew)."""
-    key = _gate_memo_key("plan_store", tf, dl)
-    hit = _gate_memo_get(key)
-    if hit is not None:
-        return hit
     n_docs = dl.count()
     if n_docs == 0:
         return "flat"
@@ -1272,9 +1266,7 @@ def maxscore_gate_plan_from_postings(tf: DataFrame,
         yield pd.DataFrame(
             {"plan": [_plan_decision(ids, counts, mod)]})
 
-    verdict = str(pick.mapInPandas(_gate, "plan string").first().plan)
-    _gate_memo_put(key, verdict)
-    return verdict
+    return str(pick.mapInPandas(_gate, "plan string").first().plan)
 
 
 @query("q189_bm25_blockmax_topk", f"""{SQL_BM25_POOL}
@@ -2308,16 +2300,9 @@ def quality_metrics_from(pool: DataFrame, truth: DataFrame,
         recall.cast("bigint").alias("recall_ppm"))
 
 
-_QUALITY_MEMO: dict = {}   # (appId, sf_dir) -> graded per-query frame
-_GRADE_MEMO: dict = {}     # (appId, sf_dir) -> (pool, px, truth)
-_TERM_MEMO: dict = {}      # (appId, sf_dir) -> (tf, dfq, dl, stats)
-_POOL_MEMO: dict = {}      # (appId, sf_dir) -> BM25 pool (rank ≤ POOL)
-_PRF_MEMO: dict = {}       # (appId, sf_dir) -> q187 top-k (bounded)
-
-
-def _quality_memo_on() -> bool:
-    import os
-    return os.environ.get("SPARK_GRAFT_QUALITY_MEMO", "1") != "0"
+def _corpus_memo(kind: str, spark: SparkSession, sf_dir: str, build):
+    return _RETRIEVAL.get_or_build(
+        (kind, spark.sparkContext.applicationId, sf_dir), build)
 
 
 def corpus_term_frames_memo(spark: SparkSession, sf_dir: str,
@@ -2335,24 +2320,17 @@ def corpus_term_frames_memo(spark: SparkSession, sf_dir: str,
     aggregates).  The one-shot single-consumer plans (q175/q176 via
     _bm25_pool) stay on the lazy un-checkpointed path so their bench
     rows remain true pipeline costs."""
-    use_memo = _quality_memo_on()
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if use_memo and key in _TERM_MEMO:
-        return _TERM_MEMO[key]
-    if p is not None:
-        # p IS the materialization: tf's consumers re-aggregate its
-        # in-hand rows (bounded, in-memory) — a second checkpoint of
-        # tf would double-pay materialization for no saved scan (the
-        # r15 bench found exactly that +1.5 s on the memo-off path)
-        tf, dfq, dl, stats = corpus_term_frames_from(p)
-    else:
+    def build():
+        if p is not None:
+            # p IS the materialization: tf's consumers re-aggregate its
+            # in-hand rows (bounded, in-memory) — a second checkpoint of
+            # tf would double-pay materialization for no saved scan (the
+            # r15 bench found exactly that +1.5 s on the memo-off path)
+            return corpus_term_frames_from(p)
         d = load_table(spark, sf_dir, "documents")
         tf, dfq, dl, stats = corpus_term_frames(d)
-        tf = tf.localCheckpoint(eager=True)
-    out = (tf, dfq, dl, stats)
-    if use_memo:
-        _TERM_MEMO[key] = out
-    return out
+        return tf.localCheckpoint(eager=True), dfq, dl, stats
+    return _corpus_memo("term", spark, sf_dir, build)
 
 
 def bm25_pool_memo(spark: SparkSession, sf_dir: str,
@@ -2366,24 +2344,21 @@ def bm25_pool_memo(spark: SparkSession, sf_dir: str,
     (r15 single-scan pipeline).  POOL·|queries| rows — trivial to
     checkpoint.  Memo off: returns the lazy plan (true-cost bench
     runs)."""
-    use_memo = _quality_memo_on()
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if use_memo and key in _POOL_MEMO:
-        return _POOL_MEMO[key]
-    tf, dfq, dl, stats = corpus_term_frames_memo(spark, sf_dir, p=p)
-    pool = bm25_pool_from(tf, dfq, dl, stats, query_terms_from(tf))
-    if use_memo:
-        pool = pool.localCheckpoint(eager=True)
-        _POOL_MEMO[key] = pool
-    return pool
+    def build():
+        tf, dfq, dl, stats = corpus_term_frames_memo(spark, sf_dir, p=p)
+        pool = bm25_pool_from(tf, dfq, dl, stats, query_terms_from(tf))
+        if _RETRIEVAL.enabled:
+            pool = pool.localCheckpoint(eager=True)
+        return pool
+    return _corpus_memo("pool", spark, sf_dir, build)
 
 
 def quality_corpus_frames(spark: SparkSession, sf_dir: str):
     """(pool, px, truth) — the three corpus-pass products the grading
     family shares (the BM25 pool, the q182 proximity feature, the
     graded truth), memoized + eagerly checkpointed per
-    (applicationId, sf_dir) under the same SPARK_GRAFT_QUALITY_MEMO
-    switch as the graded frame (r14, extending the r13 ask-#3
+    (applicationId, sf_dir) under the same memo entry as the graded
+    frame (r14, extending the r13 ask-#3
     extraction one level down so q191's three-system comparison reads
     the SAME frames q185 grades instead of re-running three corpus
     passes — measured 14.7 s -> ~4 s at sf0.1 with the memo warm).
@@ -2392,35 +2367,32 @@ def quality_corpus_frames(spark: SparkSession, sf_dir: str):
     hold tiny frames, each produced by one corpus pass.  With the
     memo bypassed nothing is checkpointed and the frames stay lazy —
     q185's bench number remains the TRUE pipeline cost."""
-    use_memo = _quality_memo_on()
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if use_memo and key in _GRADE_MEMO:
-        return _GRADE_MEMO[key]
-    d = load_table(spark, sf_dir, "documents")
-    # ONE-SCAN pipeline (r15): the positional postings are the hub —
-    # materialized once (an in-call checkpoint, part of the pipeline
-    # cost even with the memo bypassed, the q187-tf precedent), then
-    # the query probe, the proximity feature, the truth tiers AND the
-    # BM25 term frames (via corpus_term_frames_memo's ``p`` route)
-    # all derive from its in-hand rows.  Corpus text is read exactly
-    # twice per cold build: this posexplode and the trigram shingle
-    # kernel (q179 — a numpy codepoint fold over raw text that a
-    # token stream cannot feed), down from the r14 pipeline's four
-    # tokenize/explode passes.
-    p = token_postings(d).localCheckpoint(eager=True)
-    qtermf = (p.where(F.col("doc_id") < N_QUERIES)
-              .select(F.col("doc_id").alias("query_id"), "term")
-              .distinct())
-    px = proximity_from(p, qtermf)
-    if use_memo:
-        px = px.localCheckpoint(eager=True)
-    truth = relevance_truth_from(p, q179_phrase_match(spark, sf_dir),
-                                 prox=px)
-    pool = bm25_pool_memo(spark, sf_dir, p=p)
-    if use_memo:
-        truth = truth.localCheckpoint(eager=True)
-        _GRADE_MEMO[key] = (pool, px, truth)
-    return pool, px, truth
+    def build():
+        d = load_table(spark, sf_dir, "documents")
+        # ONE-SCAN pipeline (r15): the positional postings are the hub —
+        # materialized once (an in-call checkpoint, part of the pipeline
+        # cost even with the memo bypassed, the q187-tf precedent), then
+        # the query probe, the proximity feature, the truth tiers AND the
+        # BM25 term frames (via corpus_term_frames_memo's ``p`` route)
+        # all derive from its in-hand rows.  Corpus text is read exactly
+        # twice per cold build: this posexplode and the trigram shingle
+        # kernel (q179 — a numpy codepoint fold over raw text that a
+        # token stream cannot feed), down from the r14 pipeline's four
+        # tokenize/explode passes.
+        p = token_postings(d).localCheckpoint(eager=True)
+        qtermf = (p.where(F.col("doc_id") < N_QUERIES)
+                  .select(F.col("doc_id").alias("query_id"), "term")
+                  .distinct())
+        px = proximity_from(p, qtermf)
+        if _RETRIEVAL.enabled:
+            px = px.localCheckpoint(eager=True)
+        truth = relevance_truth_from(p, q179_phrase_match(spark, sf_dir),
+                                     prox=px)
+        pool = bm25_pool_memo(spark, sf_dir, p=p)
+        if _RETRIEVAL.enabled:
+            truth = truth.localCheckpoint(eager=True)
+        return pool, px, truth
+    return _corpus_memo("grade", spark, sf_dir, build)
 
 
 def graded_quality_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2433,27 +2405,22 @@ def graded_quality_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     of suite wall-time for two N_QUERIES-row frames).  The memoized
     frame is eagerly localCheckpointed (N_QUERIES rows — trivial to
     hold) so the second consumer reads materialized rows instead of
-    re-deriving three corpus passes.  SPARK_GRAFT_QUALITY_MEMO=0
-    bypasses the cache entirely (no read, no write): bench.py sets it
-    around q185's own runs so every benched q185 sample measures the
-    TRUE pipeline cost under min-of-N in one app; q186's bench entry
-    reuses the frame by design — BASELINE.md ledgers that (the
-    q167/q174 edge-memo split, applied verbatim)."""
-    use_memo = _quality_memo_on()
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if use_memo:
-        hit = _QUALITY_MEMO.get(key)
-        if hit is not None:
-            return hit
-    pool, _, truth = quality_corpus_frames(spark, sf_dir)
-    out = quality_metrics_from(
-        pool.where(F.col("rank") <= TOP_K)
-        .select("query_id", "cand_id", "rank"),
-        truth, base=query_doc_base(spark, sf_dir))
-    if use_memo:
-        out = out.localCheckpoint(eager=True)
-        _QUALITY_MEMO[key] = out
-    return out
+    re-deriving three corpus passes.  memo.bypass("retrieval") skips
+    the memo entirely (no read, no write): bench.py wraps q185's own
+    runs in it so every benched q185 sample measures the TRUE pipeline
+    cost under min-of-N in one app; q186's bench entry reuses the
+    frame by design — BASELINE.md ledgers that (the q167/q174
+    edge-memo split, applied verbatim)."""
+    def build():
+        pool, _, truth = quality_corpus_frames(spark, sf_dir)
+        out = quality_metrics_from(
+            pool.where(F.col("rank") <= TOP_K)
+            .select("query_id", "cand_id", "rank"),
+            truth, base=query_doc_base(spark, sf_dir))
+        if _RETRIEVAL.enabled:
+            out = out.localCheckpoint(eager=True)
+        return out
+    return _corpus_memo("quality", spark, sf_dir, build)
 
 
 def q185_retrieval_quality(spark: SparkSession,
@@ -2563,7 +2530,7 @@ def _three_system_macros(spark: SparkSession, sf_dir: str):
     pool, px, truth = quality_corpus_frames(spark, sf_dir)
     base = query_doc_base(spark, sf_dir)
     nrel, idcg = truth_side_frames(truth)
-    if _quality_memo_on():
+    if _RETRIEVAL.enabled:
         nrel = nrel.localCheckpoint(eager=True)
         idcg = idcg.localCheckpoint(eager=True)
     bm25_tk = (pool.where(F.col("rank") <= TOP_K)
@@ -2764,7 +2731,7 @@ def q192_prf_quality_compare(spark: SparkSession,
     pool, _, truth = quality_corpus_frames(spark, sf_dir)
     base = query_doc_base(spark, sf_dir)
     nrel, idcg = truth_side_frames(truth)
-    if _quality_memo_on():
+    if _RETRIEVAL.enabled:
         nrel = nrel.localCheckpoint(eager=True)
         idcg = idcg.localCheckpoint(eager=True)
     bm25_tk = (pool.where(F.col("rank") <= TOP_K)
@@ -2938,33 +2905,31 @@ def q187_prf_expanded_bm25(spark: SparkSession,
     terms from the top-PRF_DOCS docs → BM25 pass 2 with the expanded
     query (see block comment).  (query_id, cand_id, score,
     rank ≤ TOP_K)."""
-    use_memo = _quality_memo_on()
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if use_memo and key in _PRF_MEMO:
-        return _PRF_MEMO[key]
-    tf, dfq, dl, stats = corpus_term_frames_memo(spark, sf_dir)
-    qterms = query_terms_from(tf)
-    # pass-1 sharing only where there IS a share: with the memo
-    # bypassed, bm25_pool_memo would rebuild the frames a second time
-    # (the r15 bench caught the duplicate checkpoint) — pool1=None
-    # lets prf_expanded_pool score pass 1 off the frames in hand,
-    # which is the r14 true-cost shape exactly
-    pool1 = bm25_pool_memo(spark, sf_dir) if use_memo else None
-    pool2 = prf_expanded_pool(tf, dfq, dl, stats, qterms,
-                              pool1=pool1)
-    out = (pool2.where(F.col("rank") <= TOP_K)
-           .select("query_id", "cand_id",
-                   (F.col("fp_sum") / F.lit(FP)).alias("score"),
-                   "rank"))
-    if use_memo:
-        # the PRF RANKING is itself memoized (TOP_K·|queries| rows —
-        # trivial): q192 then grades an already-computed system frame,
-        # exactly how a production gate reads a served ranking (the
-        # q186-reads-q185 pattern; bench ledger in BASELINE.md — the
-        # memo-bypassed q187 row remains the TRUE two-pass cost)
-        out = out.localCheckpoint(eager=True)
-        _PRF_MEMO[key] = out
-    return out
+    def build():
+        tf, dfq, dl, stats = corpus_term_frames_memo(spark, sf_dir)
+        qterms = query_terms_from(tf)
+        # pass-1 sharing only where there IS a share: with the memo
+        # bypassed, bm25_pool_memo would rebuild the frames a second
+        # time (the r15 bench caught the duplicate checkpoint) —
+        # pool1=None lets prf_expanded_pool score pass 1 off the
+        # frames in hand, which is the r14 true-cost shape exactly
+        pool1 = bm25_pool_memo(spark, sf_dir) if _RETRIEVAL.enabled else None
+        pool2 = prf_expanded_pool(tf, dfq, dl, stats, qterms,
+                                  pool1=pool1)
+        out = (pool2.where(F.col("rank") <= TOP_K)
+               .select("query_id", "cand_id",
+                       (F.col("fp_sum") / F.lit(FP)).alias("score"),
+                       "rank"))
+        if _RETRIEVAL.enabled:
+            # the PRF RANKING is itself memoized (TOP_K·|queries| rows
+            # — trivial): q192 then grades an already-computed system
+            # frame, exactly how a production gate reads a served
+            # ranking (the q186-reads-q185 pattern; bench ledger in
+            # BASELINE.md — the memo-bypassed q187 row remains the TRUE
+            # two-pass cost)
+            out = out.localCheckpoint(eager=True)
+        return out
+    return _corpus_memo("prf", spark, sf_dir, build)
 
 
 # --- q188: best-passage extraction (windowed query-term density) ---------------

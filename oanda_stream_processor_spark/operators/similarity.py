@@ -29,6 +29,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..io import load_table
 
 QUERIES: dict = {}
@@ -447,7 +448,7 @@ def _assign_cells(df: DataFrame, cent_one: DataFrame) -> DataFrame:
 TARGET_CELL_OCC = 64
 
 
-_COUNT_CACHE: dict = {}
+_CORPUS_ROWS = memo.register("corpus_rows")
 
 
 def _corpus_rows(e: DataFrame) -> int:
@@ -455,13 +456,8 @@ def _corpus_rows(e: DataFrame) -> int:
     repeated operators over the same table skip the count job (file
     listing is driver-side metadata). Frames without input files
     (streaming batches, test fixtures) fall through to a plain count."""
-    key = tuple(sorted(e.inputFiles()))
-    if key and key in _COUNT_CACHE:
-        return _COUNT_CACHE[key]
-    n = e.count()
-    if key:
-        _COUNT_CACHE[key] = n
-    return n
+    return _CORPUS_ROWS.get_or_build(tuple(sorted(e.inputFiles())) or None,
+                                     e.count)
 
 
 def _growth_splits(n_rows: int, base_cells: int,

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..io import load_table
 from .helpers import davg, exact_tdiv, sql_davg
 
@@ -446,7 +447,7 @@ def q126_boilerplate_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             texts = batch.column(1)
             keep_ids, out = [], []
             for i in range(len(ids)):
-                wsl = [x for x in texts[i].as_py().split(" ") if x]
+                wsl = [x for x in (texts[i].as_py() or "").split(" ") if x]
                 if len(wsl) < BOILER_SH:
                     continue
                 keep_ids.append(ids[i].as_py())
@@ -975,7 +976,7 @@ def q157_winnow_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 # min-label loop — one shuffle-join + one agg per round, O(component
 # diameter) rounds, and verified-dup components are shallow.
 # ---------------------------------------------------------------------------
-_STAR_EDGE_CACHE: dict = {}
+_STAR_EDGES = memo.register("star_edges")
 
 
 def winnow_verified_star_edges(spark: SparkSession,
@@ -991,20 +992,19 @@ def winnow_verified_star_edges(spark: SparkSession,
     Memoized per (applicationId, sf_dir) — the winnow_component_frame
     precedent (r8): q174 (which unions these edges with the LSH pairs)
     reuses the checkpointed frame instead of re-running the
-    recall+verify pipeline.  SPARK_GRAFT_EDGE_MEMO=0 bypasses the
-    cache entirely (no read, no write): bench.py sets it around
-    q167's own runs so every benched q167 sample measures the TRUE
-    build cost even under min-of-N in one app (the r11 ADVICE —
-    without the flag, run 2+ reported the cache-hit path while the
-    ledger claimed a build measurement).  q174's bench entry still
-    reuses the frame by design; BASELINE.md ledgers that."""
-    import os
-    use_memo = os.environ.get("SPARK_GRAFT_EDGE_MEMO", "1") != "0"
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if use_memo:
-        hit = _STAR_EDGE_CACHE.get(key)
-        if hit is not None:
-            return hit
+    recall+verify pipeline.  ``memo.bypass("star_edges")`` skips the
+    memo entirely (no read, no write): bench.py wraps q167's own runs
+    in it so every benched q167 sample measures the TRUE build cost
+    even under min-of-N in one app (the r11 ADVICE — without it, run
+    2+ reported the memo-hit path while the ledger claimed a build
+    measurement).  q174's bench entry still reuses the frame by
+    design; BASELINE.md ledgers that."""
+    return _STAR_EDGES.get_or_build(
+        (spark.sparkContext.applicationId, sf_dir),
+        lambda: _build_star_edges(spark, sf_dir))
+
+
+def _build_star_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     fps = _winnow_postings(spark, sf_dir, with_hub=True)
     sizes = fps.groupBy("doc_id").agg(F.count("*").alias("n"))
     cand = (fps.where(F.col("doc_id") != F.col("hub"))
@@ -1021,13 +1021,10 @@ def winnow_verified_star_edges(spark: SparkSession,
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
     num = F.col("n_shared").cast("decimal(38,0)") * 1_000_000
     den = F.least(F.col("na"), F.col("nb"))
-    hit = (ns.join(sa, "doc_a").join(sb, "doc_b")
-             .where(exact_tdiv(num, den) >= MIN_CONTAIN_PPM)
-             .select("doc_a", "doc_b")
-             .localCheckpoint(eager=True))
-    if use_memo:
-        _STAR_EDGE_CACHE[key] = hit
-    return hit
+    return (ns.join(sa, "doc_a").join(sb, "doc_b")
+            .where(exact_tdiv(num, den) >= MIN_CONTAIN_PPM)
+            .select("doc_a", "doc_b")
+            .localCheckpoint(eager=True))
 
 
 @query("q167_winnow_components", f"""
@@ -1106,7 +1103,7 @@ def q168_winnow_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     return keep_one_by_quality(comp, d)
 
 
-_WINNOW_COMPONENT_CACHE: dict = {}
+_WINNOW_COMPONENTS = memo.register("winnow_components")
 
 
 def winnow_component_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1114,14 +1111,11 @@ def winnow_component_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     q167 for downstream consumers (q168's keep-one) — the same
     materialize-once semantics as dedup.component_frame; q167's own
     bench entry keeps measuring the true build cost."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _WINNOW_COMPONENT_CACHE.get(key)
-    if hit is None:
-        hit = (q167_winnow_components(spark, sf_dir)
-               .select("doc_id", "component")
-               .localCheckpoint(eager=True))
-        _WINNOW_COMPONENT_CACHE[key] = hit
-    return hit
+    return _WINNOW_COMPONENTS.get_or_build(
+        (spark.sparkContext.applicationId, sf_dir),
+        lambda: (q167_winnow_components(spark, sf_dir)
+                 .select("doc_id", "component")
+                 .localCheckpoint(eager=True)))
 
 
 def _fill_q168_oracle() -> None:

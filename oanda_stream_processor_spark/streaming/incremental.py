@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..operators.dedup import (
     BAND_ROWS,
     N_BANDS,
@@ -204,7 +205,7 @@ def bloom_filter_bands(band_rows: DataFrame, bitset: DataFrame,
 # fixpoint. The batch-parity test proves one-batch updates reproduce
 # the full q55 labels on index ∪ batch exactly.
 # ---------------------------------------------------------------------------
-_INDEX_CACHE: dict = {}
+_INDEX = memo.register("component_index")
 
 
 def build_component_index(docs: DataFrame, *, max_rounds: int = 20):
@@ -216,15 +217,15 @@ def build_component_index(docs: DataFrame, *, max_rounds: int = 20):
     one Spark application return the memoized checkpointed state,
     keyed by (applicationId, analyzed-plan semanticHash, input files)
     so different filters over the same files never collide."""
-    key = None
     files = tuple(sorted(docs.inputFiles()))
-    if files:
-        key = (docs.sparkSession.sparkContext.applicationId,
-               docs._jdf.queryExecution().analyzed().semanticHash(),
-               files)
-        hit = _INDEX_CACHE.get(key)
-        if hit is not None:
-            return hit
+    key = ((docs.sparkSession.sparkContext.applicationId,
+            docs._jdf.queryExecution().analyzed().semanticHash(),
+            files) if files else None)
+    return _INDEX.get_or_build(key,
+                               lambda: _build_index(docs, max_rounds))
+
+
+def _build_index(docs: DataFrame, max_rounds: int):
     flat = _band_flat(docs).localCheckpoint(eager=True)
     a = flat.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
     b = flat.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key")
@@ -248,8 +249,6 @@ def build_component_index(docs: DataFrame, *, max_rounds: int = 20):
                      .select("band_id", "band_key", "component")
                      .distinct()
                      .localCheckpoint(eager=True))
-    if key is not None:
-        _INDEX_CACHE[key] = (labels, labeled_bands)
     return labels, labeled_bands
 
 

@@ -5,7 +5,8 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from oanda_stream_processor_spark.session import get_spark  # noqa: E402
 
@@ -113,4 +114,4 @@ def spark():
 
 @pytest.fixture()
 def tick_capture() -> str:
-    return "/root/repo/tests/data/ticks.ndjson"
+    return os.path.join(REPO, "tests", "data", "ticks.ndjson")

@@ -14,21 +14,16 @@ cost 3-4x more jobs."""
 
 from __future__ import annotations
 
-import os
+from oanda_stream_processor_spark import memo
+from oanda_stream_processor_spark.operators.textops import (
+    q167_winnow_components,
+)
 
 JOB_BUDGET = 40
 
 
+@memo.bypass("star_edges")  # force the true build
 def test_q167_cold_build_stays_within_job_budget(spark):
-    from oanda_stream_processor_spark.operators.textops import (
-        q167_winnow_components,
-    )
-
-    # save/restore rather than pop: a runner that pre-sets the memo
-    # var must get it back, not a silently cleared env (the bench.py
-    # one_run discipline, r12 ADVICE)
-    prev_memo = os.environ.get("SPARK_GRAFT_EDGE_MEMO")
-    os.environ["SPARK_GRAFT_EDGE_MEMO"] = "0"  # force the true build
     sc = spark.sparkContext
     try:
         sc.setJobGroup("q167_budget", "component job-count guard")
@@ -36,10 +31,6 @@ def test_q167_cold_build_stays_within_job_budget(spark):
          .write.format("noop").mode("overwrite").save())
         ids = sc.statusTracker().getJobIdsForGroup("q167_budget")
     finally:
-        if prev_memo is None:
-            os.environ.pop("SPARK_GRAFT_EDGE_MEMO", None)
-        else:
-            os.environ["SPARK_GRAFT_EDGE_MEMO"] = prev_memo
         # clear via the local properties, NOT setJobGroup("", "") —
         # the empty STRING is itself a group, and every later job in
         # the session would land in it, blinding any other test that

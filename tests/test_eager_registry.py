@@ -19,6 +19,7 @@ process that builds the whole registry.
 
 from __future__ import annotations
 
+from oanda_stream_processor_spark import memo
 from oanda_stream_processor_spark.io import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -29,25 +30,14 @@ TABLES = ("region nation customer supplier part orders lineitem events "
 def test_eager_build_marker_matches_reality(spark):
     import __spark_entry__ as ent
 
+    # the sweep pins the FIRST-build profile — purge every build-once
+    # memo so earlier tests sharing this session cannot have warmed
+    # them (r15: the sweep is order-robust; it failed spuriously
+    # whenever a retrieval test ran q185/q187 first).  Purge BEFORE
+    # the table warm-up, which refills the table memo.
+    memo.purge_all()
     for t in TABLES:  # warm schema inference / file-index caches
         load_table(spark, SF, t).schema
-
-    # the sweep pins the FIRST-build profile — clear the build-once
-    # memos so earlier tests sharing this session cannot have warmed
-    # them (r15: the sweep is now order-robust; it failed spuriously
-    # whenever a retrieval test ran q185/q187 first)
-    from oanda_stream_processor_spark.operators import (
-        dedup as D,
-        retrieval as R,
-        similarity as S,
-        textops as T,
-    )
-    for memo in (R._QUALITY_MEMO, R._GRADE_MEMO, R._TERM_MEMO,
-                 R._POOL_MEMO, R._PRF_MEMO, R._GATE_MEMO,
-                 T._STAR_EDGE_CACHE,
-                 T._WINNOW_COMPONENT_CACHE, D._COMPONENT_CACHE,
-                 S._COUNT_CACHE):
-        memo.clear()
 
     # sweep under an OWN job group: the default-group tracker reads
     # nothing if any earlier test in the shared session left a group

@@ -6,6 +6,7 @@ pytest as well as the audit script."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 from pyspark.sql import Window as W
@@ -13,7 +14,8 @@ from pyspark.sql import functions as F
 
 from oanda_stream_processor_spark.io import load_table
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "tools"))
 
 SF_DIR = "/root/testdata/sf0.001"
 

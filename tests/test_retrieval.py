@@ -10,6 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from oanda_stream_processor_spark import memo
 from oanda_stream_processor_spark.operators import retrieval as R
 
 SF = "/root/testdata/sf0.001"
@@ -217,13 +218,13 @@ def test_maxscore_spread_gate_routing(spark):
     assert R.maxscore_gate_is_prunable(oddmark)
 
 
-def test_gate_memo_skips_repeat_probes(spark, monkeypatch):
+def test_gate_memo_skips_repeat_probes(spark):
     """r17 (VERDICT r16 Next-round #1): the plan-gate verdict is a
     corpus property — a repeat gate call over the same parquet files
-    must hit the memo and run ZERO Spark jobs; SPARK_GRAFT_QUALITY_
-    MEMO=0 bypasses (the true-cost bench convention); in-memory
-    fixtures are never memoized (no file fingerprint); and a fresh
-    recompute with the memo cleared returns the identical verdict."""
+    must hit the memo and run ZERO Spark jobs; memo.bypass("retrieval")
+    recomputes (the true-cost bench convention); in-memory fixtures
+    are never memoized (no file fingerprint); and a fresh recompute
+    with the memo cleared returns the identical verdict."""
     import oanda_stream_processor_spark.operators.retrieval as R
     from oanda_stream_processor_spark.io import load_table
 
@@ -231,7 +232,7 @@ def test_gate_memo_skips_repeat_probes(spark, monkeypatch):
     d = load_table(spark, sf, "documents")
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    R._GATE_MEMO.clear()
+    R._RETRIEVAL.clear()
     sc.setJobGroup("gate_memo", "gate memo probe sweep")
     try:
         first = R.maxscore_gate_is_prunable(d)
@@ -247,18 +248,17 @@ def test_gate_memo_skips_repeat_probes(spark, monkeypatch):
     # coherence: plan != 'flat' iff the binary gate fired, memo or not
     assert (plan_first != "flat") == first
     # memo-off bypass recomputes and agrees
-    monkeypatch.setenv("SPARK_GRAFT_QUALITY_MEMO", "0")
-    assert R._gate_memo_key("prunable", d) is None
-    assert R.maxscore_gate_is_prunable(d) is first
-    monkeypatch.delenv("SPARK_GRAFT_QUALITY_MEMO")
+    with memo.bypass("retrieval"):
+        assert R._gate_memo_key("prunable", d) is None
+        assert R.maxscore_gate_is_prunable(d) is first
     # in-memory fixtures carry no input files -> never memoized
     fx = spark.createDataFrame([(0, "a b"), (1, "a c")],
                                "doc_id long, text string")
-    n0 = len(R._GATE_MEMO)
+    n0 = len(R._RETRIEVAL.keys())
     R.maxscore_gate_is_prunable(fx)
-    assert len(R._GATE_MEMO) == n0
+    assert len(R._RETRIEVAL.keys()) == n0
     # cleared memo recomputes to the identical verdict
-    R._GATE_MEMO.clear()
+    R._RETRIEVAL.clear()
     assert R.maxscore_gate_is_prunable(d) is first
     assert R.maxscore_gate_plan(d) == plan_first
 
@@ -279,15 +279,15 @@ def test_gate_memo_store_fingerprint_tracks_appends(spark, tmp_path):
             for i in range(1000)]
     d = spark.createDataFrame(rows, "doc_id long, text string")
     state = str(tmp_path / "bm25")
-    R._GATE_MEMO.clear()
+    R._RETRIEVAL.clear()
     write_batch_partials(d.where(F.col("doc_id") % 2 == 0), state, 0)
     v0 = R.maxscore_gate_from_postings(read_tf(spark, state),
                                        read_dl(spark, state))
-    keys0 = set(R._GATE_MEMO)
+    keys0 = R._RETRIEVAL.keys()
     write_batch_partials(d.where(F.col("doc_id") % 2 == 1), state, 1)
     v1 = R.maxscore_gate_from_postings(read_tf(spark, state),
                                        read_dl(spark, state))
-    keys1 = set(R._GATE_MEMO)
+    keys1 = R._RETRIEVAL.keys()
     assert keys0 < keys1, "append did not change the memo fingerprint"
     # both verdicts match the text gate on the same ingested docs
     assert v1 == R.maxscore_gate_is_prunable(d)
@@ -322,7 +322,7 @@ def test_gate_memo_persists_next_to_store(spark, tmp_path,
     for i in range(2):
         write_batch_partials(d.where(F.col("doc_id") % 2 == i),
                              state, i)
-    R._GATE_MEMO.clear()
+    R._RETRIEVAL.clear()
     v_pr = R.maxscore_gate_from_postings(read_tf(spark, state),
                                          read_dl(spark, state))
     v_pl = R.maxscore_gate_plan_from_postings(read_tf(spark, state),
@@ -335,7 +335,7 @@ def test_gate_memo_persists_next_to_store(spark, tmp_path,
     def _boom(*a, **k):
         raise AssertionError("probe ran despite persisted verdict")
 
-    R._GATE_MEMO.clear()
+    R._RETRIEVAL.clear()
     monkeypatch.setattr(DataFrame, "count", _boom)
     monkeypatch.setattr(DataFrame, "mapInPandas", _boom)
     assert R.maxscore_gate_from_postings(
@@ -350,7 +350,7 @@ def test_gate_memo_persists_next_to_store(spark, tmp_path,
         [(i, f"{common} rare0a rare0b") for i in range(1000, 1200)],
         "doc_id long, text string")
     write_batch_partials(extra, state, 2)
-    R._GATE_MEMO.clear()
+    R._RETRIEVAL.clear()
     v2 = R.maxscore_gate_plan_from_postings(read_tf(spark, state),
                                             read_dl(spark, state))
     key2 = R._gate_memo_key("plan_store", read_tf(spark, state),
@@ -359,19 +359,92 @@ def test_gate_memo_persists_next_to_store(spark, tmp_path,
 
     # memo-off: no read, no write
     os.remove(side)
-    monkeypatch.setenv("SPARK_GRAFT_QUALITY_MEMO", "0")
-    assert R.maxscore_gate_plan_from_postings(
-        read_tf(spark, state), read_dl(spark, state)) == v2
+    with memo.bypass("retrieval"):
+        assert R.maxscore_gate_plan_from_postings(
+            read_tf(spark, state), read_dl(spark, state)) == v2
     assert not os.path.exists(side)
-    monkeypatch.delenv("SPARK_GRAFT_QUALITY_MEMO")
 
     # text gates (fixture-backed) stay process-local: no sidecar ever
     # lands in the input data directory
     from oanda_stream_processor_spark.io import load_table
     sf = "/root/testdata/sf0.001"
-    R._GATE_MEMO.clear()
+    R._RETRIEVAL.clear()
     R.maxscore_gate_is_prunable(load_table(spark, sf, "documents"))
     assert not os.path.exists(os.path.join(sf, ".gate_memo.json"))
+
+
+@pytest.fixture(scope="module")
+def null_text_sf(tmp_path_factory) -> str:
+    """A copy of sf0.001 with the ``text`` of 10 of its 500 documents
+    set to NULL (one of them, doc 5, a query document)."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("sf_null_text")
+    for t in TABLES:
+        shutil.copy(os.path.join(SF, f"{t}.parquet"), d)
+    path = os.path.join(d, "documents.parquet")
+    docs = pq.read_table(path)
+    hit = pc.is_in(docs["doc_id"],
+                   value_set=pa.array(range(5, 500, 50), pa.int64()))
+    text = pc.if_else(hit, pa.scalar(None, pa.string()), docs["text"])
+    docs = docs.set_column(docs.schema.get_field_index("text"), "text",
+                           text)
+    assert docs["text"].null_count == 10
+    pq.write_table(docs, path)
+    return str(d)
+
+
+@pytest.mark.parametrize("name", [
+    "q126_boilerplate_shingles", "q178_bm25_maxscore_topk",
+    "q183_bm25f_maxscore_topk", "q189_bm25_blockmax_topk",
+    "q194_bm25f_blockmax_topk"])
+def test_null_text_matches_duckdb(spark, null_text_sf, name):
+    """The Python kernels that split ``text`` (q126's shingle kernel,
+    the plan-gate probes) read NULL text as empty: the query does not
+    raise and still matches its DuckDB twin under the oracle gate's
+    digest."""
+    import __spark_entry__ as ent
+    from tools.verify_oracle import canon
+
+    sdf = ent.queries()[name](spark, null_text_sf)
+    srows = [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"'{null_text_sf}/{t}.parquet'")
+    res = con.execute(ent.oracle_sql()[name])
+    ocols = [c[0] for c in res.description]
+    orows = res.fetchall()
+    assert sorted(sdf.columns) == sorted(ocols)
+    assert len(srows) == len(orows)
+    assert canon(srows, sdf.columns)[0] == canon(orows, ocols)[0]
+
+
+def test_gate_sidecar_heals_corrupt_file(tmp_path):
+    """A corrupt .gate_memo.json must not switch persistence off for
+    its store: the next verdict write replaces it with valid JSON that
+    loads back (Spark-free: the key is built by hand)."""
+    import json
+
+    files = []
+    for layout in ("tf", "dl"):
+        part = tmp_path / layout / "batch_id=0"
+        part.mkdir(parents=True)
+        (part / "a.parquet").write_bytes(b"")
+        files.append((f"file://{part}/a.parquet",))
+    key = ("plan_store", tuple(files))
+    side = tmp_path / ".gate_memo.json"
+    for garbage in ("{not json", "[1, 2]"):
+        side.write_text(garbage)
+        assert R._gate_sidecar_load(key) is None
+        R._gate_sidecar_store(key, "block")
+        assert isinstance(json.loads(side.read_text()), dict)
+        assert R._gate_sidecar_load(key) == "block"
 
 
 def test_maxscore_prunes_hard_on_zipfian_vocab(spark):
@@ -854,7 +927,7 @@ def test_quality_gated_fusion_fixture_and_gate_core(spark, duck):
     assert [r.system for r in w2] == ["bm25"]
 
 
-def test_prf_single_scan_memo_parity(spark, monkeypatch):
+def test_prf_single_scan_memo_parity(spark):
     """r15 single-scan grading pipeline: q187 built off the shared
     memoized postings checkpoint + pass-1 pool (corpus_term_frames_
     memo / bm25_pool_memo) equals the memo-bypassed TRUE two-pass run
@@ -862,9 +935,9 @@ def test_prf_single_scan_memo_parity(spark, monkeypatch):
     frames under the same scoring core, never a semantic change."""
     warm = sorted(tuple(r) for r in
                   R.q187_prf_expanded_bm25(spark, SF).collect())
-    monkeypatch.setenv("SPARK_GRAFT_QUALITY_MEMO", "0")
-    cold = sorted(tuple(r) for r in
-                  R.q187_prf_expanded_bm25(spark, SF).collect())
+    with memo.bypass("retrieval"):
+        cold = sorted(tuple(r) for r in
+                      R.q187_prf_expanded_bm25(spark, SF).collect())
     assert warm == cold
 
 

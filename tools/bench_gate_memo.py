@@ -2,7 +2,7 @@
 q178/q183/q189/q194 pay a bounded ~2k-doc plan-gate probe at every
 query CONSTRUCTION — harmless once, but a serving process that
 rebuilds queries per request re-pays a probe whose answer is a
-property of the corpus, not the query.  retrieval._GATE_MEMO now
+property of the corpus, not the query.  The retrieval memo entry now
 memoizes the verdict per (gate kind, corpus input-file fingerprint),
 so only the first construction probes.
 
@@ -13,7 +13,7 @@ This tool times, at the given sf_dir (the sf0.1 fixture routes
   repeat-build cost should approach with the memo warm;
 * q194 first   — memo COLD (probe paid), one run;
 * q194 repeat  — memo WARM (probe skipped), min-of-runs;
-* q194 memo-off — SPARK_GRAFT_QUALITY_MEMO=0 (the true-cost bench
+* q194 memo-off — memo.bypass("retrieval") (the true-cost bench
   convention: the probe IS part of the query's first-request cost
   and the official bench keeps measuring it), min-of-runs;
 * q178 repeat/memo-off — the binary-gate family, same shape (its
@@ -33,7 +33,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.abspath(os.path.join(__file__, "../..")))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 RUNS = int(sys.argv[2]) if len(sys.argv) > 2 else 3
@@ -41,6 +41,7 @@ RUNS = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 
 def main() -> None:
     import oanda_stream_processor_spark.operators.retrieval as R
+    from oanda_stream_processor_spark.memo import bypass
     from oanda_stream_processor_spark.session import get_spark
 
     spark = get_spark(app_name="bench_gate_memo")
@@ -58,15 +59,14 @@ def main() -> None:
         .mode("overwrite").save()
 
     # parity: memo-on rows == memo-off rows for both gated queries
-    os.environ["SPARK_GRAFT_QUALITY_MEMO"] = "0"
-    want194 = sorted(map(tuple,
-                         R.q194_bm25f_blockmax_topk(spark,
-                                                    SF_DIR).collect()))
-    want178 = sorted(map(tuple,
-                         R.q178_bm25_maxscore_topk(spark,
-                                                   SF_DIR).collect()))
-    del os.environ["SPARK_GRAFT_QUALITY_MEMO"]
-    R._GATE_MEMO.clear()
+    with bypass("retrieval"):
+        want194 = sorted(map(tuple,
+                             R.q194_bm25f_blockmax_topk(spark,
+                                                        SF_DIR).collect()))
+        want178 = sorted(map(tuple,
+                             R.q178_bm25_maxscore_topk(spark,
+                                                       SF_DIR).collect()))
+    R._RETRIEVAL.clear()
     assert sorted(map(tuple, R.q194_bm25f_blockmax_topk(
         spark, SF_DIR).collect())) == want194, "q194 memo changed rows"
     assert sorted(map(tuple, R.q178_bm25_maxscore_topk(
@@ -75,27 +75,23 @@ def main() -> None:
     out = {"metric": "gate_statistic_memo", "sf_dir": SF_DIR,
            "runs": RUNS,
            "plan": R.maxscore_gate_plan(
-               __import__("oanda_stream_processor_spark.io",
-                          fromlist=["load_table"])
-               .load_table(spark, SF_DIR, "documents"))}
+               R.load_table(spark, SF_DIR, "documents"))}
 
     out["q177_delegate_s"] = best_of(R.q177_bm25f_topk)
-    R._GATE_MEMO.clear()
+    R._RETRIEVAL.clear()
     out["q194_first_build_s"] = round(
         run_once(R.q194_bm25f_blockmax_topk), 3)
     out["q194_repeat_memo_s"] = best_of(R.q194_bm25f_blockmax_topk)
-    os.environ["SPARK_GRAFT_QUALITY_MEMO"] = "0"
-    out["q194_memo_off_s"] = best_of(R.q194_bm25f_blockmax_topk)
-    del os.environ["SPARK_GRAFT_QUALITY_MEMO"]
+    with bypass("retrieval"):
+        out["q194_memo_off_s"] = best_of(R.q194_bm25f_blockmax_topk)
 
     out["q175_delegate_s"] = best_of(R.q175_bm25_topk)
-    R._GATE_MEMO.clear()
+    R._RETRIEVAL.clear()
     out["q178_first_build_s"] = round(
         run_once(R.q178_bm25_maxscore_topk), 3)
     out["q178_repeat_memo_s"] = best_of(R.q178_bm25_maxscore_topk)
-    os.environ["SPARK_GRAFT_QUALITY_MEMO"] = "0"
-    out["q178_memo_off_s"] = best_of(R.q178_bm25_maxscore_topk)
-    del os.environ["SPARK_GRAFT_QUALITY_MEMO"]
+    with bypass("retrieval"):
+        out["q178_memo_off_s"] = best_of(R.q178_bm25_maxscore_topk)
 
     out["q194_repeat_saving_s"] = round(
         out["q194_memo_off_s"] - out["q194_repeat_memo_s"], 3)
@@ -103,7 +99,7 @@ def main() -> None:
         out["q178_memo_off_s"] - out["q178_repeat_memo_s"], 3)
     out["rows_equal"] = True
     out["note"] = ("repeat = gate memo warm (probe skipped); memo-off "
-                   "= SPARK_GRAFT_QUALITY_MEMO=0, the official bench's "
+                   "= memo.bypass('retrieval'), the official bench's "
                    "true-cost convention (probe paid per build)")
     print(json.dumps(out))
     spark.stop()

@@ -11,7 +11,7 @@ before every run (= fresh process):
 * probe    — sidecar removed each run: the full bounded probe
   (pre-r18 restart cost);
 * sidecar  — sidecar present: the r18 restart path (one JSON read);
-* memo-off — SPARK_GRAFT_QUALITY_MEMO=0: the bench's timed-region
+* memo-off — memo.bypass("retrieval"): the bench's timed-region
   protocol, asserted to keep probing (and never write the sidecar).
 
 Verdicts asserted identical across all three.  Prints one JSON line.
@@ -27,7 +27,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.abspath(os.path.join(__file__, "../..")))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 N_BATCHES = int(sys.argv[2]) if len(sys.argv) > 2 else 12
@@ -40,6 +40,7 @@ def main() -> None:
 
     import oanda_stream_processor_spark.operators.retrieval as R
     from oanda_stream_processor_spark.io import load_table
+    from oanda_stream_processor_spark.memo import bypass
     from oanda_stream_processor_spark.operators.retrieval import N_QUERIES
     from oanda_stream_processor_spark.session import get_spark
     from oanda_stream_processor_spark.streaming.bm25gate import (
@@ -68,7 +69,7 @@ def main() -> None:
     def best(prep) -> tuple[float, tuple]:
         out, verdicts = float("inf"), None
         for _ in range(RUNS):
-            R._GATE_MEMO.clear()          # = restarted process
+            R._RETRIEVAL.clear()          # = restarted process
             prep()
             t0 = time.perf_counter()
             verdicts = gates()
@@ -83,11 +84,10 @@ def main() -> None:
     assert os.path.isfile(side), "probe run did not write the sidecar"
     sidecar_s, v_side = best(lambda: None)
 
-    os.environ["SPARK_GRAFT_QUALITY_MEMO"] = "0"
     rm_side()
-    memooff_s, v_off = best(lambda: None)
+    with bypass("retrieval"):
+        memooff_s, v_off = best(lambda: None)
     assert not os.path.isfile(side), "memo-off wrote the sidecar"
-    del os.environ["SPARK_GRAFT_QUALITY_MEMO"]
 
     assert v_probe == v_side == v_off, "verdict diverged across paths"
     out = {

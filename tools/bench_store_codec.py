@@ -24,7 +24,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.abspath(os.path.join(__file__, "../..")))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 N_BATCHES = int(sys.argv[2]) if len(sys.argv) > 2 else 12

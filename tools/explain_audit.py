@@ -7,9 +7,10 @@ Usage: python tools/explain_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.abspath(os.path.join(__file__, "../..")))
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
@@ -155,16 +156,8 @@ def hinted_unbounded_broadcasts(df):
 
 
 def main() -> int:
-    import os
-
     from oanda_stream_processor_spark.operators import relational, scalar
     from oanda_stream_processor_spark.session import get_spark
-
-    # the q185/q186 graded-frame memo returns an eagerly-checkpointed
-    # frame whose plan is a bare RDD scan — the audit must walk the
-    # REAL grading pipeline (its windows/joins), so bypass the memo
-    # for the whole audit process (r14; the bench.py q185 precedent)
-    os.environ["SPARK_GRAFT_QUALITY_MEMO"] = "0"
 
     spark = get_spark(app_name="explain_audit")
     failures = []
@@ -584,4 +577,12 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    from oanda_stream_processor_spark import memo
+    from oanda_stream_processor_spark.operators import retrieval  # noqa: F401
+
+    # the q185/q186 graded-frame memo returns an eagerly-checkpointed
+    # frame whose plan is a bare RDD scan — the audit must walk the
+    # REAL grading pipeline (its windows/joins), so bypass the memo
+    # for the whole audit (r14; the bench.py q185 precedent)
+    with memo.bypass("retrieval"):
+        sys.exit(main())

@@ -6,9 +6,10 @@ No Spark session needed — imports only walk the registries.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.abspath(os.path.join(__file__, "../..")))
 
 
 def main() -> None:

@@ -11,16 +11,18 @@ and rewrites the README block between the markers
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
     n = f"{int(sys.argv[1]):02d}"
     rec = f"ORACLE_LOCAL_r{n}.txt"
-    txt = open(f"/root/repo/{rec}").read()
+    txt = open(os.path.join(REPO, rec)).read()
     # per-SF summary: the "N pass, M fail, K rows-only" line that ends
     # each section (the whole-file tail is the sf0.1 section's)
     sections = re.split(r"=== (sf[\d.]+) ===", txt)[1:]
@@ -40,13 +42,13 @@ def main() -> None:
         "  FLOOR-quantized argmin keys — see `ORACLE_VERSIONS.txt` and\n"
         "  `tools/oracle_dtype_audit.py`).\n"
         "<!-- correctness:end -->")
-    readme = open("/root/repo/README.md").read()
+    readme = open(os.path.join(REPO, "README.md")).read()
     out, cnt = re.subn(
         r"<!-- correctness:begin -->.*?<!-- correctness:end -->",
         block.replace("\\", r"\\"), readme, flags=re.S)
     if cnt != 1:
         raise SystemExit("README markers not found (expected exactly 1)")
-    open("/root/repo/README.md", "w").write(out)
+    open(os.path.join(REPO, "README.md"), "w").write(out)
     print(f"README correctness block regenerated from {rec}:")
     for p in parts:
         print(" ", p)

@@ -15,9 +15,10 @@ Prints per-query ok/MISMATCH and exits nonzero on any mismatch.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.abspath(os.path.join(__file__, "../..")))
 from tools.verify_oracle import canon  # noqa: E402  (same hash as the gate)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"

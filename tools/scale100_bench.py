@@ -18,8 +18,8 @@ sublinear-per-core and cluster headroom is real; factor100 >> 100
 means super-linear work (the thing the growth rules exist to prevent).
 
 PINNED PROTOCOL (r17; VERDICT r16 Next-round #5): BOTH legs run
-memo-off (SPARK_GRAFT_QUALITY_MEMO=0 and SPARK_GRAFT_EDGE_MEMO=0 are
-forced for the measurement) and BOTH legs are min-of-N — x1 at
+memo-off (``memo.bypass("retrieval", "star_edges")`` around the whole
+measurement) and BOTH legs are min-of-N — x1 at
 ``runs_x1`` (default 2), x100 at ``SPARK_GRAFT_X100_RUNS`` (default
 2).  r15/r16 measured the build-once families by hand with per-query
 memo-off re-runs and the ratio column churned on x1-side noise (q167
@@ -39,7 +39,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.abspath(os.path.join(__file__, "../..")))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 X100_DIR = "/tmp/spark_graft_x100"
@@ -142,16 +142,15 @@ def build_x100(spark) -> None:
 
 
 # r18 (VERDICT r17 Next-round #4): the pinned memo-off protocol
-# bypasses the env-gated memos (EDGE/QUALITY), but the materialize-
-# once component frames (_COMPONENT_CACHE, _WINNOW_COMPONENT_CACHE —
-# production semantics: build once, every consumer reads the frame)
-# have no env gate, so their CONSUMERS' rows record the warm
+# bypasses the retrieval and star-edge memos, but the materialize-once
+# component frames (production semantics: build once, every consumer
+# reads the frame) stay on, so their CONSUMERS' rows record the warm
 # incremental pass (cold spot-check r17: q168 x100 222 s vs warm
-# 4.2 s).  Those consumers now get an extra cold column: the caches
-# are purged before every cold run, so both truths are in the record
-# — x100 (warm consumer read, the production steady state) and
-# x100_cold (full build-from-scratch).  Warm columns are computed
-# exactly as before — no factor churn.
+# 4.2 s).  Those consumers also get a cold column: every memo is
+# purged (memo.purge_all) before every cold run, so both truths are
+# in the record — x100 (warm consumer read, the production steady
+# state) and x100_cold (full build-from-scratch).  Warm columns are
+# computed exactly as before — no factor churn.
 COLD_SPLIT = {
     "q97_canonical_by_quality",
     "q168_winnow_canonical",
@@ -159,27 +158,8 @@ COLD_SPLIT = {
 }
 
 
-def purge_build_memos() -> None:
-    """Clear every module-level build memo (the process-restart
-    simulation for the cold column)."""
-    from oanda_stream_processor_spark.operators import (
-        dedup,
-        retrieval,
-        similarity,
-        textops,
-    )
-    from oanda_stream_processor_spark.streaming import incremental
-    for cache in (dedup._COMPONENT_CACHE, similarity._COUNT_CACHE,
-                  textops._STAR_EDGE_CACHE,
-                  textops._WINNOW_COMPONENT_CACHE,
-                  incremental._INDEX_CACHE, retrieval._GATE_MEMO,
-                  retrieval._QUALITY_MEMO, retrieval._GRADE_MEMO,
-                  retrieval._TERM_MEMO, retrieval._POOL_MEMO,
-                  retrieval._PRF_MEMO):
-        cache.clear()
-
-
 def main() -> None:
+    from oanda_stream_processor_spark import memo
     from oanda_stream_processor_spark.session import get_spark
 
     import __spark_entry__ as ent
@@ -190,31 +170,33 @@ def main() -> None:
     build_s = round(time.perf_counter() - t0, 1)
 
     # pinned protocol: memo-off both sides (module docstring)
-    os.environ["SPARK_GRAFT_QUALITY_MEMO"] = "0"
-    os.environ["SPARK_GRAFT_EDGE_MEMO"] = "0"
-    runs_x100 = int(os.environ.get("SPARK_GRAFT_X100_RUNS", "2"))
+    with memo.bypass("retrieval", "star_edges"):
+        measure(spark, ent.queries(), build_s)
 
-    queries = ent.queries()
+
+def measure(spark, queries: dict, build_s: float) -> None:
+    from oanda_stream_processor_spark import memo
+
+    runs_x100 = int(os.environ.get("SPARK_GRAFT_X100_RUNS", "2"))
     names = sorted(ONLY) if ONLY else DEFAULT_SET
     results = {}
+
+    def leg(fn, sf: str, runs: int, cold: bool = False) -> float:
+        times = []
+        for _ in range(runs):
+            if cold:
+                memo.purge_all()
+            t1 = time.perf_counter()
+            fn(spark, sf).write.format("noop").mode("overwrite").save()
+            times.append(time.perf_counter() - t1)
+        return round(min(times), 3)
+
     for name in names:
         fn = queries[name]
         row = {}
-
-        def leg(sf: str, runs: int, cold: bool = False) -> float:
-            times = []
-            for _ in range(runs):
-                if cold:
-                    purge_build_memos()
-                t1 = time.perf_counter()
-                fn(spark, sf).write.format("noop") \
-                    .mode("overwrite").save()
-                times.append(time.perf_counter() - t1)
-            return round(min(times), 3)
-
         try:
-            row["x1"] = leg(SF_DIR, RUNS)
-            row["x100"] = leg(X100_DIR, runs_x100)
+            row["x1"] = leg(fn, SF_DIR, RUNS)
+            row["x100"] = leg(fn, X100_DIR, runs_x100)
         except Exception as exc:   # keep sweeping; a broken query is a row
             row["error"] = f"{type(exc).__name__}: {exc}"[:200]
             results[name] = row
@@ -235,16 +217,8 @@ def main() -> None:
         fn = queries[name]
         row = results[name]
         try:
-            for col, sf, runs in (("x1_cold", SF_DIR, RUNS),
-                                  ("x100_cold", X100_DIR, runs_x100)):
-                times = []
-                for _ in range(runs):
-                    purge_build_memos()
-                    t1 = time.perf_counter()
-                    fn(spark, sf).write.format("noop") \
-                        .mode("overwrite").save()
-                    times.append(time.perf_counter() - t1)
-                row[col] = round(min(times), 3)
+            row["x1_cold"] = leg(fn, SF_DIR, RUNS, cold=True)
+            row["x100_cold"] = leg(fn, X100_DIR, runs_x100, cold=True)
         except Exception as exc:
             row["cold_error"] = f"{type(exc).__name__}: {exc}"[:200]
             continue

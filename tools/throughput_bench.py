@@ -18,11 +18,12 @@ from __future__ import annotations
 import glob
 import json
 import random
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.abspath(os.path.join(__file__, "../..")))
 
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000
 MODE = sys.argv[2] if len(sys.argv) > 2 else "both"

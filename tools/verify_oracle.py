@@ -11,12 +11,13 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.abspath(os.path.join(__file__, "../..")))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2:])
