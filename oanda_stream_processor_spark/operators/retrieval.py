@@ -644,28 +644,24 @@ _GATE_SIDECAR = ".gate_memo.json"
 
 
 def _gate_sidecar_path(key) -> str | None:
-    """Sidecar path for a persistable gate key: the common local
-    directory above every input file (<store>/<layout>/batch_id=*/…
-    for both frames -> the store root).  None when the kind is not
-    store-backed or any file is not a plain local path."""
+    """Sidecar path for a persistable gate key: the root of the one
+    partial store every input file lives in (``store.parse``).  None
+    when the kind is not store-backed, or any file is not a local
+    store partial, or the files span more than one store — a sidecar
+    is only ever written inside a store the engine owns."""
     import os
-    from urllib.parse import unquote, urlparse
+
+    from ..streaming import store
     kind, file_sets = key
     if not kind.endswith("_store"):
         return None
-    paths = []
-    for tup in file_sets:
-        for p in tup:
-            if p.startswith("file:"):
-                paths.append(unquote(urlparse(p).path))
-            elif p.startswith("/"):
-                paths.append(p)
-            else:        # remote FS — no local sidecar
-                return None
-    common = os.path.commonpath(paths)
-    if not os.path.isdir(common):
+    roots = {(store.parse(p) or (None,))[0]
+             for tup in file_sets for p in tup}
+    if len(roots) != 1 or None in roots:
         return None
-    return os.path.join(common, _GATE_SIDECAR)
+    root = roots.pop()
+    return (os.path.join(root, _GATE_SIDECAR) if os.path.isdir(root)
+            else None)
 
 
 def _gate_fingerprint(key) -> str:

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from . import store
 from ..operators.similarity import (
     IVF_K,
     TOP_K,
@@ -183,8 +184,4 @@ def run_ann_stream(stream: DataFrame, index_cells: DataFrame,
                                       split_planes=split_planes),
              batch_id)
 
-    writer = stream.writeStream.foreachBatch(_each) \
-        .trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return store.start(stream, _each, checkpoint)

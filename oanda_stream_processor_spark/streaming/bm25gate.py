@@ -13,7 +13,7 @@ part is SUM-decomposable over any doc-disjoint batching of the corpus:
 
 So the gate maintains two tiny mergeable partials per micro-batch —
 (term, df) and the one-row (n_docs, sum_dl) — each written under its
-OWN batch_id=<id> partition (overwrite-by-partition = idempotent
+OWN batch partition (overwrite-by-partition = idempotent
 replay, the contamgate/kmvgate recovery pattern; the merge itself is a
 SUM ledger, so idempotence comes from the partition overwrite, not the
 algebra). The read side merges with one groupBy.
@@ -33,7 +33,7 @@ corpus).
 SERVING HALF (round 11; the round-10 verdict's named gap): the gate
 now also persists the per-document LOCAL side — the (cand_id, term,
 tf) postings and the (cand_id, dl) lengths of each batch — under the
-same batch_id=<id> overwrite-partition scheme (the matview pattern:
+same per-batch overwrite-partition scheme (the matview pattern:
 idempotent replay by partition overwrite).  Because batches are
 doc-disjoint, the local stores need NO merge on read: a doc's rows
 live in exactly one partition, so the read side is a plain partitioned
@@ -75,11 +75,10 @@ main.rs) has no retrieval surface; north-star extension.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import store
 from ..operators.retrieval import (
     FP,
     N_QUERIES,
@@ -130,39 +129,30 @@ def batch_block_partial(docs: DataFrame) -> DataFrame:
 
 def read_term_df(spark: SparkSession, state_dir: str) -> DataFrame:
     """Merged (term, df) over all persisted batch partials."""
-    return (spark.read.parquet(os.path.join(state_dir, "df"))
-            .groupBy("term").agg(F.sum("df").alias("df")))
+    return store.read(spark, state_dir, store.DF)
 
 
 def read_corpus_stats(spark: SparkSession, state_dir: str) -> DataFrame:
     """Merged one-row (n_docs, sum_dl)."""
-    return (spark.read.parquet(os.path.join(state_dir, "corpus"))
-            .agg(F.sum("n_docs").alias("n_docs"),
-                 F.sum("sum_dl").alias("sum_dl")))
+    return store.read(spark, state_dir, store.CORPUS)
 
 
 def read_tf(spark: SparkSession, state_dir: str) -> DataFrame:
     """Stored postings across all batches — a plain partitioned scan
     (doc-disjoint batches mean a doc's rows exist exactly once)."""
-    return (spark.read.parquet(os.path.join(state_dir, "tf"))
-            .select("cand_id", "term", "tf"))
+    return store.read(spark, state_dir, store.TF)
 
 
 def read_dl(spark: SparkSession, state_dir: str) -> DataFrame:
     """Stored per-doc lengths across all batches."""
-    return (spark.read.parquet(os.path.join(state_dir, "dl"))
-            .select("cand_id", "dl"))
+    return store.read(spark, state_dir, store.DL)
 
 
 def read_block_stats(spark: SparkSession, state_dir: str) -> DataFrame:
     """Merged blocked layout (term, block_id, max_tf, min_dl) —
     MAX/MIN-merge over the per-batch partials (a block's docs may
     arrive across batches; see batch_block_partial)."""
-    return (spark.read.parquet(os.path.join(state_dir, "blk"))
-            .groupBy("term", "block_id")
-            .agg(F.max("max_tf").alias("max_tf"),
-                 F.min("min_dl").alias("min_dl"))
-            .select("block_id", "term", "max_tf", "min_dl"))
+    return store.read(spark, state_dir, store.BLK)
 
 
 def maybe_read_block_stats(spark: SparkSession,
@@ -172,13 +162,8 @@ def maybe_read_block_stats(spark: SparkSession,
     blk/ directory, and ``blockmax_candidates`` derives block stats
     from tf ⋈ dl when handed None — so pre-r14 stores keep serving
     through the block plan (one extra bounded aggregate) instead of
-    throwing on the missing path.  FS-agnostic: probes via the reader
-    (PATH_NOT_FOUND), not a local-filesystem stat."""
-    from pyspark.errors import AnalysisException
-    try:
-        return read_block_stats(spark, state_dir)
-    except AnalysisException:
-        return None
+    throwing on the missing path."""
+    return store.maybe_read(spark, state_dir, store.BLK)
 
 
 def serve_bm25_pool(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -345,8 +330,8 @@ def serve_bm25_blockmax_topk(spark: SparkSession, state_dir: str, *,
 
 def write_batch_partials(docs: DataFrame, state_dir: str,
                          batch_id: int) -> None:
-    """Persist all six partials of one doc-disjoint batch under their
-    batch_id=<id> partitions (overwrite = idempotent replay).  All
+    """Persist all six partials of one doc-disjoint batch, one batch
+    partition per layout (overwrite = idempotent replay).  All
     six hang off the same (doc, term) aggregate — cache it for the
     batch so the batch scan and tokenize run once, not six times.
     The fifth (r14) is the batch's blocked-layout slice, serving the
@@ -362,18 +347,12 @@ def write_batch_partials(docs: DataFrame, state_dir: str,
     tf, dfq, dl, stats = corpus_term_frames(docs)
     tf = tf.cache()
     try:
-        tf.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "tf", f"batch_id={batch_id}"))
-        dfq.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "df", f"batch_id={batch_id}"))
-        dl.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "dl", f"batch_id={batch_id}"))
-        stats.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "corpus", f"batch_id={batch_id}"))
-        block_stats_from(tf, dl).write.mode("overwrite").parquet(
-            os.path.join(state_dir, "blk", f"batch_id={batch_id}"))
-        impact_partial_from(tf, dl).write.mode("overwrite").parquet(
-            os.path.join(state_dir, "impact", f"batch_id={batch_id}"))
+        for layout, part in (
+                (store.TF, tf), (store.DF, dfq), (store.DL, dl),
+                (store.CORPUS, stats),
+                (store.BLK, block_stats_from(tf, dl)),
+                (store.IMPACT, impact_partial_from(tf, dl))):
+            store.write(part, state_dir, layout, batch_id)
     finally:
         tf.unpersist()
 
@@ -382,37 +361,28 @@ def start_bm25_stream(stream_docs: DataFrame, state_dir: str,
                       checkpoint_dir: str, *,
                       compact_every: int | None = None):
     """Wire a streaming documents source into the gate: each batch
-    overwrites its own tf/df/dl/corpus partials under batch_id=<id>.
-    Documents are atomic per batch (a doc's text arrives whole in one
-    micro-batch) — the decomposition above needs doc-disjoint batches,
-    which micro-batched document feeds are by construction.
+    overwrites its own partials (write_batch_partials).  Documents are
+    atomic per batch (a doc's text arrives whole in one micro-batch) —
+    the decomposition above needs doc-disjoint batches, which
+    micro-batched document feeds are by construction.
 
-    ``compact_every`` (r18; VERDICT r17 Next-round #3 — default from
-    $SPARK_GRAFT_COMPACT_EVERY, 0/None = off, unchanged behavior)
-    folds the store's batch partials every K batches via
-    ``compact.compact_bm25_store``, INSIDE the foreachBatch body: the
-    body is the store's only writer and batches run serially, so this
-    is exactly the 'between trigger cycles' window the compaction
-    contract requires.  Replay-safe: compaction never folds the
-    newest batch (the only id a foreachBatch replay can target), and
-    a replayed body re-running the compactor is a no-op (fewer than
-    two foldable ids remain).  Keeps a long-lived ingest's file count
-    O(K + layouts) instead of O(batches) — the measured COMPACT_r17
-    1.4x served-read saving, now applied without an operator having
-    to remember to call compact_* by hand."""
-    from .compact import compact_bm25_store, compact_every_default
-    every = compact_every_default(compact_every)
+    ``compact_every`` (r18; 0/None = off) folds the store's batch
+    partials every K batches via ``compact.compact_bm25_store``,
+    INSIDE the foreachBatch body (store.start).  Keeps a long-lived
+    ingest's file count O(K + layouts) instead of O(batches) — the
+    measured COMPACT_r17 1.4x served-read saving, without an operator
+    having to call compact_* by hand.
 
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch_partials(batch_df, state_dir, batch_id)
-        if every and (batch_id + 1) % every == 0:
-            compact_bm25_store(batch_df.sparkSession, state_dir)
-
-    return (stream_docs.writeStream
-            .foreachBatch(body)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    SINGLE WRITER: each batch body holds the store's writer lock, and
+    the fold also takes the lock of a co-located ``truth/`` store —
+    nothing else may write either store while this stream runs (run
+    start_truth_stream before or after it, never alongside); a second
+    writer makes the batch raise RuntimeError instead of interleaving."""
+    from .compact import compact_bm25_store
+    return store.start(
+        stream_docs, lambda b, i: write_batch_partials(b, state_dir, i),
+        checkpoint_dir, root=state_dir, compact=compact_bm25_store,
+        compact_every=compact_every)
 
 
 # --- BM25F serving store (round 11; the extension note above, done) -----------
@@ -426,8 +396,8 @@ def start_bm25_stream(stream_docs: DataFrame, state_dir: str,
 
 def write_batch_field_partials(docs: DataFrame, state_dir: str,
                                batch_id: int) -> None:
-    """Persist one doc-disjoint batch's BM25F state under its
-    batch_id=<id> partitions (overwrite = idempotent replay).  The
+    """Persist one doc-disjoint batch's BM25F state, one batch
+    partition per layout (overwrite = idempotent replay).  The
     sixth partial (r15) is the batch's PER-FIELD blocked-layout slice
     (retrieval.field_block_stats_from) — MAX/MIN-merged on read, the
     q189 scheme per field — serving the BM25F block-max read.  The
@@ -443,23 +413,14 @@ def write_batch_field_partials(docs: DataFrame, state_dir: str,
     tff, dlf, dfd, ndocs, _ = corpus_field_frames(docs)
     tff = tff.cache()
     try:
-        tff.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "tff", f"batch_id={batch_id}"))
-        dlf.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "dlf", f"batch_id={batch_id}"))
-        dfd.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "fdf", f"batch_id={batch_id}"))
-        (dlf.groupBy("field").agg(F.sum("dlf").alias("sum_dlf"))
-         .write.mode("overwrite")
-         .parquet(os.path.join(state_dir, "fsum",
-                               f"batch_id={batch_id}")))
-        ndocs.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "fnd", f"batch_id={batch_id}"))
-        field_block_stats_from(tff, dlf).write.mode("overwrite").parquet(
-            os.path.join(state_dir, "fblk", f"batch_id={batch_id}"))
-        field_impact_partial_from(tff, dlf).write.mode("overwrite") \
-            .parquet(os.path.join(state_dir, "fimpact",
-                                  f"batch_id={batch_id}"))
+        for layout, part in (
+                (store.TFF, tff), (store.DLF, dlf), (store.FDF, dfd),
+                (store.FSUM, dlf.groupBy("field")
+                 .agg(F.sum("dlf").alias("sum_dlf"))),
+                (store.FND, ndocs),
+                (store.FBLK, field_block_stats_from(tff, dlf)),
+                (store.FIMPACT, field_impact_partial_from(tff, dlf))):
+            store.write(part, state_dir, layout, batch_id)
     finally:
         tff.unpersist()
 
@@ -470,11 +431,7 @@ def read_field_block_stats(spark: SparkSession,
     min_dlf) — MAX/MIN-merge over the per-batch partials (a block's
     docs may arrive across batches, the read_block_stats theorem per
     field)."""
-    return (spark.read.parquet(os.path.join(state_dir, "fblk"))
-            .groupBy("term", "field", "block_id")
-            .agg(F.max("max_tf").alias("max_tf"),
-                 F.min("min_dlf").alias("min_dlf"))
-            .select("block_id", "term", "field", "max_tf", "min_dlf"))
+    return store.read(spark, state_dir, store.FBLK)
 
 
 def maybe_read_field_block_stats(spark: SparkSession,
@@ -482,11 +439,7 @@ def maybe_read_field_block_stats(spark: SparkSession,
     """read_field_block_stats when the fblk/ layout exists, else None
     (the maybe_read_block_stats contract for the field store: pre-r15
     stores derive block stats from tff ⋈ dlf instead of throwing)."""
-    from pyspark.errors import AnalysisException
-    try:
-        return read_field_block_stats(spark, state_dir)
-    except AnalysisException:
-        return None
+    return store.maybe_read(spark, state_dir, store.FBLK)
 
 
 def serve_bm25f_topk(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -510,17 +463,11 @@ def _field_store_frames(spark: SparkSession, state_dir: str):
     (raw stores as plain partitioned scans, mergeable stats
     SUM-merged), extracted (r15) so the flat and block-max field
     reads share one spelling."""
-    tff = (spark.read.parquet(os.path.join(state_dir, "tff"))
-           .select("cand_id", "term", "field", "tf"))
-    dlf = (spark.read.parquet(os.path.join(state_dir, "dlf"))
-           .select("cand_id", "field", "dlf"))
-    dfd = (spark.read.parquet(os.path.join(state_dir, "fdf"))
-           .groupBy("term").agg(F.sum("df").alias("df")))
-    ndocs = (spark.read.parquet(os.path.join(state_dir, "fnd"))
-             .agg(F.sum("n_docs").alias("n_docs")))
-    avgf = (spark.read.parquet(os.path.join(state_dir, "fsum"))
-            .groupBy("field").agg(F.sum("sum_dlf").alias("sum_dlf"))
-            .crossJoin(F.broadcast(ndocs))
+    tff, dlf, dfd, ndocs, fsum = (
+        store.read(spark, state_dir, lay)
+        for lay in (store.TFF, store.DLF, store.FDF, store.FND,
+                    store.FSUM))
+    avgf = (fsum.crossJoin(F.broadcast(ndocs))
             .select("field", (F.col("sum_dlf").cast("double")
                               / F.col("n_docs")).alias("avgdl")))
     return tff, dlf, dfd, ndocs, avgf
@@ -630,20 +577,13 @@ def start_bm25f_stream(stream_docs: DataFrame, state_dir: str,
                        compact_every: int | None = None):
     """availableNow/foreachBatch wiring for the BM25F field store.
     ``compact_every``: the start_bm25_stream hook, field-store half
-    (compact.compact_field_store; same replay-safety argument)."""
-    from .compact import compact_every_default, compact_field_store
-    every = compact_every_default(compact_every)
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch_field_partials(batch_df, state_dir, batch_id)
-        if every and (batch_id + 1) % every == 0:
-            compact_field_store(batch_df.sparkSession, state_dir)
-
-    return (stream_docs.writeStream
-            .foreachBatch(body)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    (compact.compact_field_store; same single-writer rule)."""
+    from .compact import compact_field_store
+    return store.start(
+        stream_docs,
+        lambda b, i: write_batch_field_partials(b, state_dir, i),
+        checkpoint_dir, root=state_dir, compact=compact_field_store,
+        compact_every=compact_every)
 
 
 def serve_prf_expanded_bm25(spark: SparkSession, state_dir: str, *,

@@ -17,7 +17,7 @@ embarrassingly mergeable:
 * the ledger — the running contamination summary (docs seen, docs
   flagged, sketch hits / sketch size) is a columnwise SUM over
   per-batch partials. Partials land in a parquet state directory
-  under batch_id=<id> (overwrite-by-partition = idempotent replay on
+  under per-batch partitions (overwrite-by-partition = idempotent replay on
   recovery, same contract as streaming/sketch.py and qualitygate.py).
 
 Batch/stream parity is exact and pytest-proven: per-doc gate verdicts
@@ -30,11 +30,10 @@ main.rs) has no decontamination; north-star extension surface.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import store
 from ..operators.curation import (
     benchmark_gram_set,
     contamination_scores,
@@ -43,6 +42,7 @@ from ..operators.curation import (
 from ..operators.helpers import exact_tdiv
 
 _COUNTS = ["n_docs", "n_contaminated", "n_hits", "n_k"]
+_LEDGER = store.Layout("", store.sum_by([], *_COUNTS))
 
 
 def score_batch(docs: DataFrame, bench: DataFrame) -> DataFrame:
@@ -70,8 +70,7 @@ def batch_partial(docs: DataFrame, bench: DataFrame) -> DataFrame:
 def read_ledger(spark: SparkSession, state_dir: str) -> DataFrame:
     """The running decontamination summary: columnwise-sum every
     persisted partial, render rates as exact integer ppm."""
-    parts = spark.read.parquet(state_dir)
-    merged = parts.agg(*[F.sum(c).alias(c) for c in _COUNTS])
+    merged = store.read(spark, state_dir, _LEDGER)
     flagged_ppm = exact_tdiv(
         F.col("n_contaminated").cast("decimal(38,0)") * 1_000_000,
         F.col("n_docs"))
@@ -90,8 +89,8 @@ def start_contamination_stream(stream_docs: DataFrame, bench: DataFrame,
 
     Each batch (a) appends its surviving (non-contaminated) doc_ids to
     ``clean_dir`` (the decontaminated output feed) when requested, and
-    (b) overwrites its own partial under batch_id=<id> so replays are
-    idempotent and the ledger sum is exactly-once."""
+    (b) overwrites its own partial so replays are idempotent and the
+    ledger sum is exactly-once."""
     def body(batch_df: DataFrame, batch_id: int) -> None:
         # score ONCE per batch; both the clean feed and the 4-count
         # partial read the same materialized scored frame (gram hashing
@@ -100,15 +99,9 @@ def start_contamination_stream(stream_docs: DataFrame, bench: DataFrame,
         scored = score_batch(batch_df, bench)
         if clean_dir is not None:
             scored = scored.localCheckpoint(eager=True)
-            (scored.where(~F.col("contaminated")).select("doc_id")
-             .write.mode("overwrite")
-             .parquet(os.path.join(clean_dir, f"batch_id={batch_id}")))
-        (partial_from_scored(scored)
-         .write.mode("overwrite")
-         .parquet(os.path.join(state_dir, f"batch_id={batch_id}")))
+            store.write(scored.where(~F.col("contaminated"))
+                        .select("doc_id"), clean_dir, store.ROOT, batch_id)
+        store.write(partial_from_scored(scored), state_dir, _LEDGER,
+                    batch_id)
 
-    return (stream_docs.writeStream
-            .foreachBatch(body)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return store.start(stream_docs, body, checkpoint_dir, root=state_dir)

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import store
 from ..operators.llmprep import dsir_bucket_col, dsir_train
 
 __all__ = ["dsir_train", "score_docs_batch", "run_dsir_stream"]
@@ -81,8 +82,4 @@ def run_dsir_stream(stream: DataFrame, lr: DataFrame, avg: DataFrame,
     def _each(batch: DataFrame, batch_id: int) -> None:
         sink(score_docs_batch(batch, lr, avg, dflt), batch_id)
 
-    writer = stream.writeStream.foreachBatch(_each) \
-        .trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return store.start(stream, _each, checkpoint)

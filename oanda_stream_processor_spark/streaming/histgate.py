@@ -6,7 +6,7 @@ domain is declared up front (stats.HIST_LO/HIST_HI/HIST_NB), so each
 batch's bucket-count vector is a plain SUM partial — the same
 columnwise-summable ledger family as qualitygate/contamgate, here
 keyed by bucket. Each batch overwrites its own partial under
-batch_id=<id> (idempotent replay); the read side SUMs per bucket and
+its batch partition (idempotent replay); the read side SUMs per bucket and
 runs the identical integer quantile walk as batch q172
 (stats.hist_quantiles — shared code), so streamed quantile reads over
 any batching equal the one-shot sketch answers row-for-row,
@@ -20,12 +20,12 @@ main.rs) has no quantile sketching; north-star extension surface.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from . import store
 from ..operators.stats import hist_buckets, hist_quantiles
+
+_BUCKETS = store.Layout("", store.sum_by(["bucket"], "n"))
 
 
 def batch_buckets(li: DataFrame) -> DataFrame:
@@ -35,8 +35,7 @@ def batch_buckets(li: DataFrame) -> DataFrame:
 
 def read_buckets(spark: SparkSession, state_dir: str) -> DataFrame:
     """Merged bucket counts from the persisted partials."""
-    return (spark.read.parquet(state_dir)
-            .groupBy("bucket").agg(F.sum("n").alias("n")))
+    return store.read(spark, state_dir, _BUCKETS)
 
 
 def read_quantiles(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -47,14 +46,8 @@ def read_quantiles(spark: SparkSession, state_dir: str) -> DataFrame:
 def start_hist_stream(stream_li: DataFrame, state_dir: str,
                       checkpoint_dir: str):
     """Wire a streaming lineitem source into the bucket gate: each
-    batch overwrites its own partial under batch_id=<id>."""
+    batch overwrites its own partial."""
     def body(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_buckets(batch_df)
-         .write.mode("overwrite")
-         .parquet(os.path.join(state_dir, f"batch_id={batch_id}")))
+        store.write(batch_buckets(batch_df), state_dir, _BUCKETS, batch_id)
 
-    return (stream_li.writeStream
-            .foreachBatch(body)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return store.start(stream_li, body, checkpoint_dir, root=state_dir)

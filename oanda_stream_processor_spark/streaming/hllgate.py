@@ -13,7 +13,7 @@ contamgate.py) demonstrate SUM ledgers.
 
 * per batch: the batch's OWN register partial (MAX rho per
   (source, bucket) over just that batch's probes) lands under
-  batch_id=<id> (overwrite-by-partition = idempotent replay, same
+  its batch partition (overwrite-by-partition = idempotent replay, same
   contract as the other gates). A replayed batch rewrites the same
   registers; because merge is MAX and the partial depends only on the
   batch's rows, replay is exactly-once by construction — and even
@@ -30,17 +30,19 @@ main.rs) has no cardinality sketching; north-star extension surface.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import store
 from ..operators.textops import (
     hll_estimates,
     hll_probes,
     hll_registers,
     merge_hll_registers,
 )
+
+_REGISTERS = store.Layout("", lambda df: merge_hll_registers(
+    df.select("source", "bucket", "rho")))
 
 
 def batch_registers(docs: DataFrame) -> DataFrame:
@@ -55,8 +57,7 @@ def read_estimates(spark: SparkSession, state_dir: str,
     columns (m, n_present, n_zero, reg_sum, raw_est, hll_est,
     method). ``with_global`` appends the '__all__' row by merging all
     sources' registers — the same in-query merge proof as batch q169."""
-    regs = merge_hll_registers(spark.read.parquet(state_dir)
-                               .select("source", "bucket", "rho"))
+    regs = store.read(spark, state_dir, _REGISTERS)
     if with_global:
         regs = regs.unionByName(
             merge_hll_registers(regs.withColumn("source", F.lit("__all__"))))
@@ -66,14 +67,9 @@ def read_estimates(spark: SparkSession, state_dir: str,
 def start_hll_stream(stream_docs: DataFrame, state_dir: str,
                      checkpoint_dir: str):
     """Wire a streaming documents source into the register gate: each
-    batch overwrites its own partial under batch_id=<id>."""
+    batch overwrites its own partial."""
     def body(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_registers(batch_df)
-         .write.mode("overwrite")
-         .parquet(os.path.join(state_dir, f"batch_id={batch_id}")))
+        store.write(batch_registers(batch_df), state_dir, _REGISTERS,
+                    batch_id)
 
-    return (stream_docs.writeStream
-            .foreachBatch(body)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return store.start(stream_docs, body, checkpoint_dir, root=state_dir)

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import store
 from .. import memo
 from ..operators.dedup import (
     BAND_ROWS,
@@ -102,11 +103,7 @@ def start_incremental_dedup(stream_docs: DataFrame, hash_index: DataFrame,
          .withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(out_path))
 
-    return (stream_docs.writeStream
-            .foreachBatch(body)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return store.start(stream_docs, body, checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -308,8 +305,4 @@ def run_component_stream(stream_docs: DataFrame, labeled_bands: DataFrame,
         sink(*incremental_component_updates(batch, labeled_bands),
              batch_id)
 
-    writer = stream_docs.writeStream.foreachBatch(_each) \
-        .trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return store.start(stream_docs, _each, checkpoint)

@@ -14,7 +14,7 @@ The merge is the min-k semiring: k smallest of the distinct union —
 associative, commutative, IDEMPOTENT (a duplicated batch partial
 changes nothing, same recovery strength as the HLL gate's MAX merge
 and stronger than the SUM ledgers). Each batch writes its OWN
-bottom-k partial under batch_id=<id> (overwrite-by-partition =
+bottom-k partial under its batch partition (overwrite-by-partition =
 idempotent replay); the read side merges with one groupBy of
 per-source array math. Batch/stream parity is pytest-proven: merged
 sketches over any batching equal the one-shot q170 sketches
@@ -26,16 +26,18 @@ main.rs) has no sketching; north-star extension surface.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
+from . import store
 from ..operators.textops import (
     kmv_cardinality,
     kmv_overlap_estimates,
     kmv_sketch_arrays,
     merge_kmv_sketches,
 )
+
+_SKETCHES = store.Layout("", lambda df: merge_kmv_sketches(
+    df.select("source", "sk")))
 
 
 def batch_sketches(docs: DataFrame) -> DataFrame:
@@ -45,8 +47,7 @@ def batch_sketches(docs: DataFrame) -> DataFrame:
 
 def read_sketches(spark: SparkSession, state_dir: str) -> DataFrame:
     """Merged per-source sketches from the persisted partials."""
-    return merge_kmv_sketches(
-        spark.read.parquet(state_dir).select("source", "sk"))
+    return store.read(spark, state_dir, _SKETCHES)
 
 
 def read_overlaps(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -62,14 +63,9 @@ def read_cardinalities(spark: SparkSession, state_dir: str) -> DataFrame:
 def start_kmv_stream(stream_docs: DataFrame, state_dir: str,
                      checkpoint_dir: str):
     """Wire a streaming documents source into the sketch gate: each
-    batch overwrites its own partial under batch_id=<id>."""
+    batch overwrites its own partial."""
     def body(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_sketches(batch_df)
-         .write.mode("overwrite")
-         .parquet(os.path.join(state_dir, f"batch_id={batch_id}")))
+        store.write(batch_sketches(batch_df), state_dir, _SKETCHES,
+                    batch_id)
 
-    return (stream_docs.writeStream
-            .foreachBatch(body)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return store.start(stream_docs, body, checkpoint_dir, root=state_dir)

@@ -14,7 +14,7 @@ eigenproblem: the STATE is mergeable even though the eigenvector
 itself is not.
 
 State layout mirrors sketch.py: each micro-batch writes its DIM*DIM
-partial under batch_id=<id> (overwrite of that partition = idempotent
+partial under its batch partition (overwrite of that partition = idempotent
 replay on recovery); the running matrix is the cellwise SUM over the
 directory (production: a Delta table with MERGE), and the power
 iteration runs on demand against the summed 4096-row frame.
@@ -25,15 +25,15 @@ north-star extension surface (SURVEY.md §2.2).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from . import store
 from ..operators.similarity import pca_from_moments, pca_moment_partials
 
 __all__ = ["batch_moments", "read_moments", "pca_top_component",
            "start_pca_stream"]
+
+_MOMENTS = store.Layout("", store.sum_by(["i", "j"], "c"))
 
 
 def batch_moments(embeddings: DataFrame) -> DataFrame:
@@ -46,8 +46,7 @@ def read_moments(spark: SparkSession, state_dir: str) -> DataFrame:
     """The running moment matrix: cellwise sum over every persisted
     partial (summing at read time makes partial writes
     idempotent-safe; a replayed batch_id replaces its own rows)."""
-    return (spark.read.parquet(state_dir)
-            .groupBy("i", "j").agg(F.sum("c").alias("c")))
+    return store.read(spark, state_dir, _MOMENTS)
 
 
 def pca_top_component(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -62,12 +61,7 @@ def start_pca_stream(stream_embeddings: DataFrame, state_dir: str,
     moment state. Exactly-once via the streaming checkpoint plus
     idempotent-by-batch_id partial writes."""
     def body(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_moments(batch_df)
-         .write.mode("overwrite")
-         .parquet(os.path.join(state_dir, f"batch_id={batch_id}")))
+        store.write(batch_moments(batch_df), state_dir, _MOMENTS, batch_id)
 
-    return (stream_embeddings.writeStream
-            .foreachBatch(body)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return store.start(stream_embeddings, body, checkpoint_dir,
+                       root=state_dir)

@@ -12,7 +12,7 @@ plain union — no SUM ledger, no re-aggregation, the strongest merge
 algebra any gate in this repo has (cf. bm25gate's SUM stats,
 hllgate's MAX registers, kmvgate's min-k).
 
-Per-batch partials land under batch_id=<id> overwrite partitions
+Per-batch partials land under per-batch overwrite partitions
 (idempotent replay, the matview pattern); the read side is a
 partitioned parquet scan.  Parity theorem (pytest-proven): the union
 of partials over ANY doc-disjoint batching equals one-shot q179
@@ -33,16 +33,19 @@ north-star extension (SURVEY.md §2.2 LLM-pipeline family).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import store
 from ..operators.dedup import _spark_shingle_hashes
 from ..operators.retrieval import N_QUERIES
 
 __all__ = ["build_phrase_frame", "batch_phrase_matches",
            "read_phrase_matches", "start_phrase_stream"]
+
+_MATCHES = store.Layout("matches",
+                        cols=("query_id", "cand_id", "n_hits", "first_pos"))
+_POSTINGS = store.Layout("postings", cols=("doc_id", "pos", "sh"))
 
 
 def build_phrase_frame(query_docs: DataFrame) -> DataFrame:
@@ -75,25 +78,18 @@ def read_phrase_matches(spark: SparkSession, state_dir: str) -> DataFrame:
     """Merged matches over all persisted batch partials — a plain
     union (doc-disjoint batches: a candidate's rows exist exactly
     once)."""
-    return (spark.read.parquet(os.path.join(state_dir, "matches"))
-            .select("query_id", "cand_id", "n_hits", "first_pos"))
+    return store.read(spark, state_dir, _MATCHES)
 
 
 def start_phrase_stream(stream_docs: DataFrame, phrases: DataFrame,
                         state_dir: str, checkpoint_dir: str):
     """Wire a streaming documents source into the gate: each batch
-    overwrites its own match partial under batch_id=<id>."""
+    overwrites its own match partial."""
     def body(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_phrase_matches(batch_df, phrases)
-         .write.mode("overwrite")
-         .parquet(os.path.join(state_dir, "matches",
-                               f"batch_id={batch_id}")))
+        store.write(batch_phrase_matches(batch_df, phrases), state_dir,
+                    _MATCHES, batch_id)
 
-    return (stream_docs.writeStream
-            .foreachBatch(body)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return store.start(stream_docs, body, checkpoint_dir, root=state_dir)
 
 
 # --- positional-postings serving store (round 11) ------------------------------
@@ -113,19 +109,17 @@ def start_phrase_stream(stream_docs: DataFrame, phrases: DataFrame,
 
 def write_batch_postings(batch: DataFrame, state_dir: str,
                          batch_id: int) -> None:
-    """Persist one batch's positional trigram postings under its
-    batch_id=<id> partition (overwrite = idempotent replay)."""
-    (_spark_shingle_hashes(batch.select("doc_id", "text"), with_pos=True)
-     .write.mode("overwrite")
-     .parquet(os.path.join(state_dir, "postings",
-                           f"batch_id={batch_id}")))
+    """Persist one batch's positional trigram postings under its own
+    batch partition (overwrite = idempotent replay)."""
+    store.write(_spark_shingle_hashes(batch.select("doc_id", "text"),
+                                      with_pos=True),
+                state_dir, _POSTINGS, batch_id)
 
 
 def read_postings(spark: SparkSession, state_dir: str) -> DataFrame:
     """Stored positional postings across all batches — a plain
     partitioned scan (doc-disjoint batches)."""
-    return (spark.read.parquet(os.path.join(state_dir, "postings"))
-            .select("doc_id", "pos", "sh"))
+    return store.read(spark, state_dir, _POSTINGS)
 
 
 def serve_phrase_matches(spark: SparkSession, state_dir: str,
@@ -143,11 +137,6 @@ def serve_phrase_matches(spark: SparkSession, state_dir: str,
 def start_postings_stream(stream_docs: DataFrame, state_dir: str,
                           checkpoint_dir: str):
     """availableNow/foreachBatch wiring for the postings store."""
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch_postings(batch_df, state_dir, batch_id)
-
-    return (stream_docs.writeStream
-            .foreachBatch(body)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return store.start(
+        stream_docs, lambda b, i: write_batch_postings(b, state_dir, i),
+        checkpoint_dir, root=state_dir)

@@ -3,7 +3,7 @@ streaming twin of q182 (operators/retrieval.py), completing the
 positional-store family next to phrasegate's trigram store.
 
 Each doc-disjoint micro-batch persists its raw (doc_id, pos, term)
-token postings under a batch_id=<id> overwrite partition (idempotent
+token postings under a per-batch overwrite partition (idempotent
 replay, the matview pattern).  Because a document's tokens live in
 exactly one partition, the read side is a plain partitioned scan — no
 merge algebra at all, the same row-disjoint argument as phrasegate's
@@ -26,33 +26,31 @@ ETL) has no retrieval surface; north-star extension.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import store
 from ..operators.retrieval import N_QUERIES, proximity_from, token_postings
 
 __all__ = ["build_query_term_frame", "read_token_postings",
            "serve_term_proximity", "start_token_postings_stream",
            "write_batch_token_postings"]
 
+_TOKPOS = store.Layout("tokpos", cols=("doc_id", "pos", "term"))
+
 
 def write_batch_token_postings(batch: DataFrame, state_dir: str,
                                batch_id: int) -> None:
-    """Persist one doc-disjoint batch's token postings under its
-    batch_id=<id> partition (overwrite = idempotent replay)."""
-    (token_postings(batch.select("doc_id", "text"))
-     .write.mode("overwrite")
-     .parquet(os.path.join(state_dir, "tokpos",
-                           f"batch_id={batch_id}")))
+    """Persist one doc-disjoint batch's token postings under its own
+    batch partition (overwrite = idempotent replay)."""
+    store.write(token_postings(batch.select("doc_id", "text")),
+                state_dir, _TOKPOS, batch_id)
 
 
 def read_token_postings(spark: SparkSession, state_dir: str) -> DataFrame:
     """Stored token postings across all batches — a plain partitioned
     scan (doc-disjoint batches: a doc's rows exist exactly once)."""
-    return (spark.read.parquet(os.path.join(state_dir, "tokpos"))
-            .select("doc_id", "pos", "term"))
+    return store.read(spark, state_dir, _TOKPOS)
 
 
 def build_query_term_frame(query_docs: DataFrame) -> DataFrame:
@@ -75,14 +73,10 @@ def serve_term_proximity(spark: SparkSession, state_dir: str,
 def start_token_postings_stream(stream_docs: DataFrame, state_dir: str,
                                 checkpoint_dir: str):
     """availableNow/foreachBatch wiring for the token-postings store."""
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch_token_postings(batch_df, state_dir, batch_id)
-
-    return (stream_docs.writeStream
-            .foreachBatch(body)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return store.start(
+        stream_docs,
+        lambda b, i: write_batch_token_postings(b, state_dir, i),
+        checkpoint_dir, root=state_dir)
 
 
 def serve_best_passage(spark: SparkSession, state_dir: str,

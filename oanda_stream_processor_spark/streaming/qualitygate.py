@@ -12,7 +12,7 @@ mergeable:
   a pure projection, so trigger boundaries cannot change any verdict;
 * the ledger — q163's 13 counts are each a SUM over disjoint
   documents, so per-batch partials merge by columnwise addition.
-  Partials land in a parquet state directory under batch_id=<id>
+  Partials land in a parquet state directory under per-batch partitions
   (overwrite-by-partition = idempotent replay on recovery, same
   contract as streaming/sketch.py), and the running ledger is one
   columnwise SUM over the directory rendered through q163's stack.
@@ -27,11 +27,10 @@ main.rs) has no quality gating; north-star extension surface.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import store
 from ..operators.curation import (
     attribution_flags,
     attribution_partial,
@@ -40,6 +39,7 @@ from ..operators.curation import (
 
 _COUNTS = ["kept", "a1", "a2", "a3", "a4",
            "w1", "w2", "w3", "w4", "s1", "s2", "s3", "s4"]
+_LEDGER = store.Layout("", store.sum_by([], *_COUNTS))
 
 
 def gate_docs(docs: DataFrame) -> DataFrame:
@@ -66,9 +66,7 @@ def batch_partial(docs: DataFrame) -> DataFrame:
 def read_ledger(spark: SparkSession, state_dir: str) -> DataFrame:
     """The running attribution table: columnwise-sum every persisted
     partial, render through q163's 5-row stack."""
-    parts = spark.read.parquet(state_dir)
-    merged = parts.agg(*[F.sum(c).alias(c) for c in _COUNTS])
-    return attribution_rows(merged)
+    return attribution_rows(store.read(spark, state_dir, _LEDGER))
 
 
 def start_quality_stream(stream_docs: DataFrame, state_dir: str,
@@ -77,19 +75,12 @@ def start_quality_stream(stream_docs: DataFrame, state_dir: str,
 
     Each batch (a) appends its surviving doc_ids to ``kept_dir`` (the
     gated output feed) when requested, and (b) overwrites its own
-    partial under batch_id=<id> so replays are idempotent and the
-    ledger sum is exactly-once."""
+    partial so replays are idempotent and the ledger sum is
+    exactly-once."""
     def body(batch_df: DataFrame, batch_id: int) -> None:
         if kept_dir is not None:
-            (gate_docs(batch_df).where("keep").select("doc_id")
-             .write.mode("overwrite")
-             .parquet(os.path.join(kept_dir, f"batch_id={batch_id}")))
-        (batch_partial(batch_df)
-         .write.mode("overwrite")
-         .parquet(os.path.join(state_dir, f"batch_id={batch_id}")))
+            store.write(gate_docs(batch_df).where("keep").select("doc_id"),
+                        kept_dir, store.ROOT, batch_id)
+        store.write(batch_partial(batch_df), state_dir, _LEDGER, batch_id)
 
-    return (stream_docs.writeStream
-            .foreachBatch(body)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return store.start(stream_docs, body, checkpoint_dir, root=state_dir)

@@ -5,7 +5,7 @@ new-family operator that lacked a served read).
 Shard membership is a pure per-row hash of doc_id — naturally
 incremental: a doc's (pk, shard_id, n_tokens) never changes once
 computed, so the gate persists exactly the ``curation.shard_keys``
-frame of each doc-disjoint micro-batch under its own batch_id=<id>
+frame of each doc-disjoint micro-batch under its own batch
 partition (overwrite-by-partition = idempotent replay, the bm25gate
 pattern).  What is NOT incremental-by-row is the intra-shard ORDER:
 q180's seq/pack_id come from the seeded global permutation, and a new
@@ -69,6 +69,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import store
 from ..operators.curation import (
     N_SHARDS,
     PACK_BUDGET,
@@ -82,13 +83,21 @@ __all__ = ["read_shard_keys", "read_shard_meta",
            "serve_shard_assignment", "serve_shard_manifest",
            "start_shard_stream", "write_batch_shard_keys"]
 
+_KEYS = store.Layout("keys", cols=("doc_id", "n_tokens", "pk", "shard_id"))
+# SUM for counts/tokens, MAX on the (pk, doc_id) permutation key for
+# the tail doc (the module docstring's algebra)
+_COUNTS = store.Layout("counts", lambda c: c.groupBy("shard_id").agg(
+    F.sum("n_docs").alias("n_docs"),
+    F.sum("shard_tokens").alias("shard_tokens"),
+    F.max(F.struct("tail_pk", "tail_doc", "tail_ntok")).alias("tail")))
+
 
 def write_batch_shard_keys(docs: DataFrame, state_dir: str,
                            batch_id: int, *, n_shards: int = N_SHARDS,
                            seed: int = SHARD_SEED) -> None:
     """Persist one doc-disjoint batch's shard-key rows plus its
-    per-shard count partial under batch_id=<id> partitions (overwrite
-    = idempotent replay).  Both frames hang off the same keys
+    per-shard count partial, one batch partition each (overwrite =
+    idempotent replay).  Both frames hang off the same keys
     projection — cache it so the batch's text pass runs once."""
     k = shard_keys(docs, n_shards=n_shards, seed=seed).cache()
     try:
@@ -102,8 +111,7 @@ def write_batch_shard_keys(docs: DataFrame, state_dir: str,
                              "seed long, n_shards long")
          .coalesce(1).write.mode("overwrite")
          .parquet(os.path.join(state_dir, "meta")))
-        k.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "keys", f"batch_id={batch_id}"))
+        store.write(k, state_dir, _KEYS, batch_id)
         counts = (k.groupBy("shard_id")
                   .agg(F.count("*").alias("n_docs"),
                        F.sum("n_tokens").alias("shard_tokens"),
@@ -113,8 +121,7 @@ def write_batch_shard_keys(docs: DataFrame, state_dir: str,
                           F.col("tail.pk").alias("tail_pk"),
                           F.col("tail.doc_id").alias("tail_doc"),
                           F.col("tail.n_tokens").alias("tail_ntok")))
-        counts.write.mode("overwrite").parquet(
-            os.path.join(state_dir, "counts", f"batch_id={batch_id}"))
+        store.write(counts, state_dir, _COUNTS, batch_id)
     finally:
         k.unpersist()
 
@@ -122,8 +129,7 @@ def write_batch_shard_keys(docs: DataFrame, state_dir: str,
 def read_shard_keys(spark: SparkSession, state_dir: str) -> DataFrame:
     """Stored key rows across all batches — a plain partitioned scan
     (doc-disjoint batches: a doc's row exists exactly once)."""
-    return (spark.read.parquet(os.path.join(state_dir, "keys"))
-            .select("doc_id", "n_tokens", "pk", "shard_id"))
+    return store.read(spark, state_dir, _KEYS)
 
 
 def read_shard_meta(spark: SparkSession, state_dir: str) -> tuple[int, int]:
@@ -165,12 +171,7 @@ def serve_shard_manifest(spark: SparkSession, state_dir: str) -> DataFrame:
     per-batch count partials (SUM for counts/tokens, MAX_BY on the
     (pk, doc_id) permutation key for the tail doc) — no window, no
     per-doc read; see the module docstring's algebra."""
-    c = spark.read.parquet(os.path.join(state_dir, "counts"))
-    merged = (c.groupBy("shard_id")
-              .agg(F.sum("n_docs").alias("n_docs"),
-                   F.sum("shard_tokens").alias("shard_tokens"),
-                   F.max(F.struct("tail_pk", "tail_doc", "tail_ntok"))
-                    .alias("tail")))
+    merged = store.read(spark, state_dir, _COUNTS)
     n_packs = exact_tdiv(F.col("shard_tokens")
                          - F.col("tail.tail_ntok"),
                          F.lit(PACK_BUDGET)) + F.lit(1)
@@ -191,8 +192,4 @@ def start_shard_stream(stream_docs: DataFrame, state_dir: str,
         write_batch_shard_keys(batch_df, state_dir, batch_id,
                                n_shards=n_shards, seed=seed)
 
-    return (stream_docs.writeStream
-            .foreachBatch(body)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return store.start(stream_docs, body, checkpoint_dir, root=state_dir)

@@ -24,12 +24,13 @@ has no aggregation state at all; north-star extension surface.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import store
 from ..operators.textops import CMS_D, CMS_W, _CMS_AFFINE, HASH_BASE, HASH_MOD
+
+_CELLS = store.Layout("", store.sum_by(["d", "bucket"], "cell"))
 
 
 def batch_sketch(docs: DataFrame) -> DataFrame:
@@ -55,8 +56,7 @@ def read_sketch(spark: SparkSession, state_dir: str) -> DataFrame:
     Compaction keeps the directory small; summing at read time makes
     partial writes idempotent-safe (a re-written batch_id replaces its
     own rows, see body below)."""
-    return (spark.read.parquet(state_dir)
-            .groupBy("d", "bucket").agg(F.sum("cell").alias("cell")))
+    return store.read(spark, state_dir, _CELLS)
 
 
 def estimate(sketch: DataFrame, tokens: DataFrame) -> DataFrame:
@@ -80,17 +80,11 @@ def start_cms_stream(stream_docs: DataFrame, state_dir: str,
                      checkpoint_dir: str):
     """Wire a streaming documents source into the running sketch.
 
-    Each batch writes its partial sketch under batch_id=<id> (overwrite
-    of that partition = idempotent replay on recovery), so the cellwise
-    sum over the directory is exactly-once without a read-modify-write
-    of the whole state."""
+    Each batch writes its partial sketch to its own batch partition
+    (overwrite of that partition = idempotent replay on recovery), so
+    the cellwise sum over the directory is exactly-once without a
+    read-modify-write of the whole state."""
     def body(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_sketch(batch_df)
-         .write.mode("overwrite")
-         .parquet(os.path.join(state_dir, f"batch_id={batch_id}")))
+        store.write(batch_sketch(batch_df), state_dir, _CELLS, batch_id)
 
-    return (stream_docs.writeStream
-            .foreachBatch(body)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return store.start(stream_docs, body, checkpoint_dir, root=state_dir)

@@ -54,7 +54,7 @@ layouts guarantee it:
 * EXTERNAL (start_theta_stream — a separately-checkpointed feed):
   the read ENFORCES the invariant with a batch-id guard
   (hist_not_ahead: histogram partitions ⊆ tf-store partitions, a
-  driver-side file-index read) and falls back to the seed-scoring
+  driver-side directory listing) and falls back to the seed-scoring
   read when the histogram may have run ahead — conservative, still
   exact.  The guard assumes the two streams batch the same source
   identically (aligned batch ids — true for the availableNow
@@ -68,7 +68,7 @@ bounded merged sketch joined to the |queries|-bounded term probe —
 no candidate scoring before the single exact scoring pass.
 
 State shape: one (term, tfc, dlb, n) SUM partial per batch under
-batch_id=<id> (overwrite = idempotent replay, the histgate/bm25gate
+its batch partition (overwrite = idempotent replay, the histgate/bm25gate
 scheme).  Cells are ≤ |vocab| · 32 · ~40 but physically bounded by
 the batch's distinct postings — in practice ~|vocab| rows (tf and dl
 concentrate).  Docs are atomic per batch, so tf and dl are final at
@@ -80,11 +80,10 @@ main.rs) has no retrieval surface; north-star extension.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from . import store
 from ..operators.retrieval import (
     BM25_B,
     BM25_K1,
@@ -123,9 +122,7 @@ def batch_impact_partial(docs: DataFrame) -> DataFrame:
 
 def read_impact_hist(spark: SparkSession, state_dir: str) -> DataFrame:
     """Merged (term, tfc, dlb, n) over all persisted batch partials."""
-    return (spark.read.parquet(state_dir)
-            .groupBy("term", "tfc", "dlb")
-            .agg(F.sum("n").alias("n")))
+    return store.read(spark, state_dir, store.HIST)
 
 
 def theta_lower_bound(hist: DataFrame, dfq: DataFrame,
@@ -166,20 +163,6 @@ def theta_lower_bound(hist: DataFrame, dfq: DataFrame,
     return reached.groupBy("query_id").agg(F.max("c").alias("theta"))
 
 
-def _store_batch_ids(spark: SparkSession, path: str) -> set:
-    """batch_id partition values present under a store directory —
-    read from the reader's FILE INDEX (``inputFiles()``: a driver-side
-    listing, no Spark job, no row scan), so the guard below costs one
-    directory listing on any filesystem."""
-    import re
-    ids: set = set()
-    for f in spark.read.parquet(path).inputFiles():
-        m = re.search(r"batch_id=(-?\d+)", f)
-        if m:
-            ids.add(int(m.group(1)))
-    return ids
-
-
 def hist_not_ahead(spark: SparkSession, bm25_state: str,
                    theta_state: str) -> bool:
     """The soundness precondition for an EXTERNALLY-fed histogram
@@ -187,8 +170,8 @@ def hist_not_ahead(spark: SparkSession, bm25_state: str,
     postings store — checked as batch-id set inclusion (the two
     availableNow streams batch the same source identically, so ids
     align; a histogram that ran ahead carries extra ids)."""
-    return (_store_batch_ids(spark, theta_state)
-            <= _store_batch_ids(spark, os.path.join(bm25_state, "tf")))
+    return (store.batch_ids(theta_state).keys()
+            <= store.batch_ids(bm25_state, store.TF).keys())
 
 
 def serve_bm25_topk_hist_theta(spark: SparkSession, bm25_state: str,
@@ -216,9 +199,8 @@ def serve_bm25_topk_hist_theta(spark: SparkSession, bm25_state: str,
         serve_bm25_topk,
     )
 
-    if theta_state is None:
-        theta_state = os.path.join(bm25_state, "impact")
-    elif not hist_not_ahead(spark, bm25_state, theta_state):
+    if theta_state is not None and not hist_not_ahead(spark, bm25_state,
+                                                      theta_state):
         # external histogram may describe docs the store lacks: its
         # θ is not a certified lower bound — take the seed-pass read
         # (exact regardless; module docstring, r14 ADVICE)
@@ -234,8 +216,10 @@ def serve_bm25_topk_hist_theta(spark: SparkSession, bm25_state: str,
                 .select("query_id", "cand_id",
                         (F.col("fp_sum") / F.lit(FP)).alias("score"),
                         "rank"))
-    return hist_theta_pruned_topk(spark, bm25_state,
-                                  read_impact_hist(spark, theta_state))
+    hist = (store.read(spark, bm25_state, store.IMPACT)
+            if theta_state is None
+            else read_impact_hist(spark, theta_state))
+    return hist_theta_pruned_topk(spark, bm25_state, hist)
 
 
 def maybe_read_impact_hist(spark: SparkSession,
@@ -243,14 +227,8 @@ def maybe_read_impact_hist(spark: SparkSession,
     """The merged canonical lockstep histogram (<bm25_state>/impact,
     the sixth write_batch_partials partial) when the store carries
     one, else None — pre-r15 stores lack it and fall back to the
-    seed-scoring θ (the maybe_read_block_stats shape: probe via the
-    reader, FS-agnostic)."""
-    from pyspark.errors import AnalysisException
-    try:
-        return read_impact_hist(spark,
-                                os.path.join(bm25_state, "impact"))
-    except AnalysisException:
-        return None
+    seed-scoring θ (the maybe_read_block_stats shape)."""
+    return store.maybe_read(spark, bm25_state, store.IMPACT)
 
 
 def hist_theta_pruned_topk(spark: SparkSession, bm25_state: str,
@@ -380,9 +358,7 @@ def read_field_impact_hist(spark: SparkSession,
                            state_dir: str) -> DataFrame:
     """Merged (term, field, tfc, dlbf, n) over all persisted batch
     partials."""
-    return (spark.read.parquet(state_dir)
-            .groupBy("term", "field", "tfc", "dlbf")
-            .agg(F.sum("n").alias("n")))
+    return store.read(spark, state_dir, store.FHIST)
 
 
 def maybe_read_field_impact_hist(spark: SparkSession,
@@ -390,12 +366,7 @@ def maybe_read_field_impact_hist(spark: SparkSession,
     """The merged lockstep per-field histogram (<field_state>/fimpact)
     when the store carries one, else None — pre-r16 field stores fall
     back to the seed-scoring θ (the maybe_read_impact_hist shape)."""
-    from pyspark.errors import AnalysisException
-    try:
-        return read_field_impact_hist(
-            spark, os.path.join(field_state, "fimpact"))
-    except AnalysisException:
-        return None
+    return store.maybe_read(spark, field_state, store.FIMPACT)
 
 
 def bm25f_theta_lower_bound(fhist: DataFrame, dfd: DataFrame,
@@ -526,24 +497,18 @@ def start_theta_stream(stream_docs: DataFrame, state_dir: str,
                        checkpoint_dir: str, *,
                        compact_every: int | None = None):
     """availableNow/foreachBatch wiring for the impact histogram:
-    each batch overwrites its own partial under batch_id=<id>.
+    each batch overwrites its own partial at the store root.
     ``compact_every``: the start_bm25_stream hook for this EXTERNAL
     store (compact.compact_theta_store).  Note its docstring's
     lockstep caveat: until the paired postings store compacts at the
     same boundary, hist_not_ahead degrades to the conservative
     seed-pass fallback — sound either way."""
-    from .compact import compact_every_default, compact_theta_store
-    every = compact_every_default(compact_every)
+    from .compact import compact_theta_store
 
     def body(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_impact_partial(batch_df)
-         .write.mode("overwrite")
-         .parquet(os.path.join(state_dir, f"batch_id={batch_id}")))
-        if every and (batch_id + 1) % every == 0:
-            compact_theta_store(batch_df.sparkSession, state_dir)
+        store.write(batch_impact_partial(batch_df), state_dir,
+                    store.HIST, batch_id)
 
-    return (stream_docs.writeStream
-            .foreachBatch(body)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return store.start(stream_docs, body, checkpoint_dir, root=state_dir,
+                       compact=compact_theta_store,
+                       compact_every=compact_every)

@@ -77,6 +77,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import store
 from ..operators.retrieval import (
     N_QUERIES,
     proximity_from,
@@ -111,19 +112,15 @@ def _truth_tiers(prox: DataFrame, qn: DataFrame,
 def _read_qsize(spark: SparkSession, state_dir: str) -> DataFrame:
     """(query_id, qsize) from the stored query-doc postings — final
     from batch 0 on under the query-docs-first contract."""
-    return (spark.read.parquet(os.path.join(state_dir, "qpost"))
-            .select(F.col("doc_id").alias("query_id"), "term")
-            .distinct()
+    return (_query_terms(spark, state_dir)
             .groupBy("query_id").agg(F.count("*").alias("qsize")))
 
 
-def _has_any_partial(spark: SparkSession, state_dir: str) -> bool:
-    from pyspark.errors import AnalysisException
-    try:
-        return bool(spark.read.parquet(os.path.join(state_dir, "prox"))
-                    .inputFiles())
-    except AnalysisException:
-        return False
+def _query_terms(spark: SparkSession, state_dir: str) -> DataFrame:
+    """Distinct (query_id, term) of the stored query side."""
+    return (store.read(spark, state_dir, store.QPOST)
+            .select(F.col("doc_id").alias("query_id"), "term")
+            .distinct())
 
 
 def maybe_truth_state(spark: SparkSession,
@@ -136,16 +133,15 @@ def maybe_truth_state(spark: SparkSession,
     (the impact/-histogram convention applied to the truth side) gets
     the fast bounded-partials grade WITHOUT the caller threading the
     kwarg; stores without the layout keep the postings-derived
-    fallback.  Probed via the reader's file index (FS-agnostic, no
-    Spark job — the maybe_read_block_stats discipline)."""
+    fallback.  One directory listing, no Spark job."""
     path = os.path.join(bm25_state, "truth")
-    return path if _has_any_partial(spark, path) else None
+    return path if store.batch_ids(path, store.PROX) else None
 
 
 def write_batch_truth_partials(docs: DataFrame, state_dir: str,
                                batch_id: int) -> None:
-    """Persist one batch's truth-side partials under batch_id=<id>
-    partitions (overwrite = idempotent replay):
+    """Persist one batch's truth-side partials, one batch partition
+    per layout (overwrite = idempotent replay):
 
     * qpost —  the batch's QUERY-doc token postings (usually empty;
       bounded by the query docs' lengths).  The merged query side IS
@@ -169,73 +165,54 @@ def write_batch_truth_partials(docs: DataFrame, state_dir: str,
     p_b = token_postings(docs)
     has_queries = bool(docs.where(F.col("doc_id") < N_QUERIES)
                        .take(1))
-    replay = os.path.isdir(os.path.join(state_dir, "qpost",
-                                        f"batch_id={batch_id}"))
-    if has_queries and not replay and _has_any_partial(spark,
-                                                       state_dir):
+    replay = os.path.isdir(store.partial_path(state_dir, store.QPOST,
+                                              batch_id))
+    if (has_queries and not replay
+            and store.batch_ids(state_dir, store.PROX)):
         raise ValueError(
             "truthgate contract violation: query docs must be "
             "ingested before any candidate batch (stored truth rows "
             "would be missing the new queries' pairs)")
-    (p_b.where(F.col("doc_id") < N_QUERIES)
-     .write.mode("overwrite")
-     .parquet(os.path.join(state_dir, "qpost",
-                           f"batch_id={batch_id}")))
-    qtermf = (spark.read
-              .parquet(os.path.join(state_dir, "qpost"))
-              .select(F.col("doc_id").alias("query_id"), "term")
-              .distinct())
+    store.write(p_b.where(F.col("doc_id") < N_QUERIES), state_dir,
+                store.QPOST, batch_id)
+    qtermf = _query_terms(spark, state_dir)
     # candidate side = ALL of the batch's docs: a query doc is a
     # legitimate candidate of OTHER queries (proximity_from excludes
     # only the self pair — the one-shot q182 convention), and under
     # the contract the query batch sees the full query side
     prox_b = (proximity_from(p_b, qtermf)
               .select("query_id", "cand_id", "n_terms", "min_dist"))
-    prox_b.write.mode("overwrite").parquet(
-        os.path.join(state_dir, "prox", f"batch_id={batch_id}"))
+    store.write(prox_b, state_dir, store.PROX, batch_id)
     # phrase tier: the query probe is each query's pos-1 trigram from
     # the stored query side; candidates are this batch's docs (self
     # pair excluded — the one-shot q179 convention)
-    qsh_store = os.path.join(state_dir, "qsh")
     qsh_b = (_spark_shingle_hashes(
         docs.where(F.col("doc_id") < N_QUERIES), with_pos=True)
         .where(F.col("pos") == 1)
         .select(F.col("doc_id").alias("query_id"),
                 F.col("sh").alias("qsh")))
-    qsh_b.write.mode("overwrite").parquet(
-        os.path.join(qsh_store, f"batch_id={batch_id}"))
-    qp = spark.read.parquet(qsh_store).select("query_id", "qsh")
+    store.write(qsh_b, state_dir, store.QSH, batch_id)
+    qp = store.read(spark, state_dir, store.QSH)
     csh = _spark_shingle_hashes(docs, with_pos=True)
     phr_b = (csh.join(qp, csh.sh == qp.qsh)
              .where(F.col("doc_id") != F.col("query_id"))
              .select("query_id", F.col("doc_id").alias("cand_id"))
              .distinct())
-    phr_b.write.mode("overwrite").parquet(
-        os.path.join(state_dir, "phr", f"batch_id={batch_id}"))
+    store.write(phr_b, state_dir, store.PHR, batch_id)
     # metric-side partials (r16): the batch's FINAL truth rows — the
     # tier arithmetic over the just-written batch partials (read back:
     # one bounded scan each, exactly what a replay would see) + the
     # stored query side (final under the contract)
-    from ..operators.retrieval import TOP_K, _pool_rank
-    prox_r = (spark.read
-              .parquet(os.path.join(state_dir, "prox",
-                                    f"batch_id={batch_id}"))
-              .select("query_id", "cand_id", "n_terms", "min_dist"))
-    phr_r = (spark.read
-             .parquet(os.path.join(state_dir, "phr",
-                                   f"batch_id={batch_id}"))
-             .select("query_id", "cand_id"))
+    prox_r, phr_r = (
+        spark.read.parquet(store.partial_path(state_dir, lay, batch_id))
+        .select(*lay.cols) for lay in (store.PROX, store.PHR))
     truth_b = _truth_tiers(prox_r, _read_qsize(spark, state_dir),
                            phr_r)
-    (truth_b.groupBy("query_id").agg(F.count("*").alias("n_rel"))
-     .write.mode("overwrite")
-     .parquet(os.path.join(state_dir, "nrel",
-                           f"batch_id={batch_id}")))
-    (_pool_rank(truth_b, [F.desc("rel"), F.asc("cand_id")], TOP_K)
-     .select("query_id", "cand_id", "rel")
-     .write.mode("overwrite")
-     .parquet(os.path.join(state_dir, "itop",
-                           f"batch_id={batch_id}")))
+    store.write(truth_b.groupBy("query_id")
+                .agg(F.count("*").alias("n_rel")),
+                state_dir, store.NREL, batch_id)
+    store.write(store.ITOP.merge(truth_b), state_dir, store.ITOP,
+                batch_id)
 
 
 def read_truth(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -243,19 +220,18 @@ def read_truth(spark: SparkSession, state_dir: str) -> DataFrame:
     the stored per-pair partials alone: the SAME tier arithmetic as
     retrieval.relevance_truth_from over unioned candidate-disjoint
     rows + the stored query side's qsize.  No corpus re-scan."""
-    prox = (spark.read.parquet(os.path.join(state_dir, "prox"))
-            .select("query_id", "cand_id", "n_terms", "min_dist"))
-    phr = (spark.read.parquet(os.path.join(state_dir, "phr"))
-           .select("query_id", "cand_id"))
-    return _truth_tiers(prox, _read_qsize(spark, state_dir), phr)
+    return _truth_tiers(store.read(spark, state_dir, store.PROX),
+                        _read_qsize(spark, state_dir),
+                        store.read(spark, state_dir, store.PHR))
 
 
 def read_truth_side(spark: SparkSession, state_dir: str):
     """(nrel, idcg) — the system-independent metric halves from the
     stored partials alone (r16; VERDICT r15 ask #3): n_rel SUM-merged
-    across batches, ideal DCG re-ranked over the unioned per-batch
-    top-TOP_K candidate lists (≤ batches·TOP_K rows per query — the
-    module docstring's containment argument makes the re-rank exact).
+    across batches, ideal DCG from the itop layout's merged read —
+    the re-rank of the unioned per-batch top-TOP_K candidate lists
+    (≤ batches·TOP_K rows per query — the module docstring's
+    containment argument makes the re-rank exact).
     Pre-r16 stores without the nrel/itop layout fall back to deriving
     both from the full stored truth (the maybe_read_block_stats
     degrade-don't-throw contract).
@@ -265,31 +241,21 @@ def read_truth_side(spark: SparkSession, state_dir: str):
     for only the post-resume batches, and a crash between the phr and
     nrel/itop writes of one batch leaves that batch uncovered; either
     way the partials would silently undercount n_rel and misprice the
-    ideal DCG.  The partials are trusted only when their batch_id
-    partition sets cover exactly the batches prox/ covers (the
-    thetagate._store_batch_ids precedent — one driver-side file
-    listing per layout, no Spark job); any mismatch degrades to the
-    full-truth derivation, which is always sound."""
-    from pyspark.errors import AnalysisException
-
+    ideal DCG.  The partials are trusted only when their batch sets
+    cover exactly the batches prox/ covers (store.batch_ids — one
+    directory listing per layout, no Spark job); any mismatch
+    degrades to the full-truth derivation, which is always sound."""
     from ..operators.retrieval import truth_side_frames
-    from .thetagate import _store_batch_ids
-    try:
-        nrel = (spark.read.parquet(os.path.join(state_dir, "nrel"))
-                .groupBy("query_id").agg(F.sum("n_rel").alias("n_rel")))
-        itop = (spark.read.parquet(os.path.join(state_dir, "itop"))
-                .select("query_id", "cand_id", "rel"))
-    except AnalysisException:
+    nrel = store.maybe_read(spark, state_dir, store.NREL)
+    itop = store.maybe_read(spark, state_dir, store.ITOP)
+    prox_ids = store.batch_ids(state_dir, store.PROX).keys()
+    if (nrel is None or itop is None
+            or store.batch_ids(state_dir, store.NREL).keys() != prox_ids
+            or store.batch_ids(state_dir, store.ITOP).keys() != prox_ids):
         return truth_side_frames(read_truth(spark, state_dir))
-    prox_ids = _store_batch_ids(spark, os.path.join(state_dir, "prox"))
-    if (_store_batch_ids(spark, os.path.join(state_dir, "nrel"))
-            != prox_ids
-            or _store_batch_ids(spark, os.path.join(state_dir, "itop"))
-            != prox_ids):
-        return truth_side_frames(read_truth(spark, state_dir))
-    # truth_side_frames' idcg half over the bounded union IS the true
-    # ideal DCG (global ideal rows ⊆ union); its nrel half would be
-    # top-K-capped per batch — replaced by the SUM-merged partial
+    # truth_side_frames' idcg half over the global ideal list IS the
+    # true ideal DCG; its nrel half would be top-K-capped — replaced
+    # by the SUM-merged partial
     _, idcg = truth_side_frames(itop)
     return nrel, idcg
 
@@ -330,17 +296,12 @@ def start_truth_stream(stream_docs: DataFrame, state_dir: str,
     bm25gate scheme; the contract check runs inside the writer).
     ``compact_every``: the start_bm25_stream hook, truth-store half
     (compact.compact_truth_store folds all six layouts with one fold
-    set, so the r17 nrel/itop/prox coverage guard stays satisfied)."""
-    from .compact import compact_every_default, compact_truth_store
-    every = compact_every_default(compact_every)
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch_truth_partials(batch_df, state_dir, batch_id)
-        if every and (batch_id + 1) % every == 0:
-            compact_truth_store(batch_df.sparkSession, state_dir)
-
-    return (stream_docs.writeStream
-            .foreachBatch(body)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    set, so the r17 nrel/itop/prox coverage guard stays satisfied).
+    Single writer: a co-located truth store (<bm25_state>/truth) must
+    not be ingested while start_bm25_stream's fold may run."""
+    from .compact import compact_truth_store
+    return store.start(
+        stream_docs,
+        lambda b, i: write_batch_truth_partials(b, state_dir, i),
+        checkpoint_dir, root=state_dir, compact=compact_truth_store,
+        compact_every=compact_every)

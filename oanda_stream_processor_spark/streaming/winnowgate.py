@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from . import store
 from ..operators.textops import FP_DF_FRAC, winnow_fingerprints
 
 __all__ = ["build_winnow_index", "batch_winnow_links",
@@ -84,8 +85,4 @@ def run_winnow_stream(stream: DataFrame, index: DataFrame, sink, *,
     def _each(batch: DataFrame, batch_id: int) -> None:
         sink(batch_winnow_links(batch, index), batch_id)
 
-    writer = stream.writeStream.foreachBatch(_each) \
-        .trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return store.start(stream, _each, checkpoint)

@@ -447,6 +447,23 @@ def test_gate_sidecar_heals_corrupt_file(tmp_path):
         assert R._gate_sidecar_load(key) == "block"
 
 
+def test_gate_sidecar_refuses_frames_from_two_stores(tmp_path):
+    """tf from store a and dl from store b share only their parent:
+    no sidecar path, and a verdict write puts nothing in that parent
+    (Spark-free: the key is built by hand)."""
+    files = []
+    for store, layout in (("a", "tf"), ("b", "dl")):
+        part = tmp_path / store / layout / "batch_id=0"
+        part.mkdir(parents=True)
+        (part / "a.parquet").write_bytes(b"")
+        files.append((f"file://{part}/a.parquet",))
+    key = ("plan_store", tuple(files))
+    assert R._gate_sidecar_path(key) is None
+    R._gate_sidecar_store(key, "block")
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["a", "b"]
+    assert not list(tmp_path.rglob(".gate_memo.json"))
+
+
 def test_maxscore_prunes_hard_on_zipfian_vocab(spark):
     """The fixtures' bounded ~100-word vocabulary makes every term
     common (df ~ N, idf ~ 0 for all), so q178's essential split keeps

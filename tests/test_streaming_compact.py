@@ -19,13 +19,13 @@ from pyspark.sql import functions as F
 from oanda_stream_processor_spark.io import load_table
 from oanda_stream_processor_spark.operators.retrieval import N_QUERIES
 from oanda_stream_processor_spark.streaming.compact import (
-    _batch_dirs,
     compact_bm25_store,
     compact_field_store,
     compact_theta_store,
     compact_truth_store,
     store_file_count,
 )
+from oanda_stream_processor_spark.streaming.store import batch_ids
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -63,7 +63,7 @@ def test_bm25_store_compaction_preserves_reads(spark, tmp_path):
     files_before = store_file_count(state)
     out = compact_bm25_store(spark, state)
     assert out["folded"] == [0, 1, 2]
-    assert set(_batch_dirs(os.path.join(state, "tf"))) == {0, 3}
+    assert set(batch_ids(os.path.join(state, "tf"))) == {0, 3}
     assert store_file_count(state) < files_before
     assert _table(serve_bm25_pool(spark, state)) == want_pool
     assert _table(serve_bm25_topk(spark, state, prune=True,
@@ -79,7 +79,7 @@ def test_bm25_store_compaction_preserves_reads(spark, tmp_path):
                                    theta="seed"))
     out = compact_bm25_store(spark, state)
     assert out["folded"] == [0, 3]
-    assert set(_batch_dirs(os.path.join(state, "tf"))) == {0, 4}
+    assert set(batch_ids(os.path.join(state, "tf"))) == {0, 4}
     assert _table(serve_bm25_topk(spark, state, prune=True,
                                   theta="hist")) == want2
     # a single remaining foldable id is a no-op (never fold the max)
@@ -155,7 +155,7 @@ def test_truth_store_compaction_preserves_reads(spark, tmp_path):
     # pin that by checking the folded itop is the BOUNDED generation
     # list, which only the partial path reads
     for sub in ("prox", "nrel", "itop"):
-        assert set(_batch_dirs(f"{t}/{sub}")) == {0, 2}, sub
+        assert set(batch_ids(f"{t}/{sub}")) == {0, 2}, sub
     assert spark.read.parquet(f"{t}/itop").count() <= itop_rows_before
     gen0 = spark.read.parquet(f"{t}/itop/batch_id=0")
     assert (gen0.groupBy("query_id").count()
@@ -242,7 +242,7 @@ def test_compaction_recovery_heals_interrupted_swap(spark, tmp_path):
     # fold of {0, 2} (the surviving ids), write the marker, leave the
     # originals in place.
     df_dir = os.path.join(state, "df")
-    ids = sorted(_batch_dirs(df_dir))
+    ids = sorted(batch_ids(df_dir))
     staged = (spark.read.parquet(
         *[f"{df_dir}/batch_id={i}" for i in ids])
         .groupBy("term").agg(F.sum("df").alias("df")))
@@ -256,25 +256,8 @@ def test_compaction_recovery_heals_interrupted_swap(spark, tmp_path):
     from oanda_stream_processor_spark.streaming.compact import _recover
     _recover(df_dir)
     assert not os.path.isfile(os.path.join(df_dir, ".compact_commit"))
-    assert sorted(_batch_dirs(df_dir)) == [min(ids)]
+    assert sorted(batch_ids(df_dir)) == [min(ids)]
     assert _table(serve_bm25_pool(spark, state)) == want
-
-
-def test_compact_every_default_resolution(monkeypatch):
-    """The r18 cadence knob: explicit kwarg wins, then
-    $SPARK_GRAFT_COMPACT_EVERY, then 0 (= off, pre-r18 behavior)."""
-    from oanda_stream_processor_spark.streaming.compact import (
-        compact_every_default,
-    )
-    monkeypatch.delenv("SPARK_GRAFT_COMPACT_EVERY", raising=False)
-    assert compact_every_default(None) == 0
-    assert compact_every_default(3) == 3
-    assert compact_every_default(-1) == 0
-    monkeypatch.setenv("SPARK_GRAFT_COMPACT_EVERY", "5")
-    assert compact_every_default(None) == 5
-    assert compact_every_default(2) == 2
-    monkeypatch.setenv("SPARK_GRAFT_COMPACT_EVERY", "")
-    assert compact_every_default(None) == 0
 
 
 def test_compact_every_hook_e2e_bounds_files_and_preserves_reads(
@@ -329,9 +312,9 @@ def test_compact_every_hook_e2e_bounds_files_and_preserves_reads(
                 .json(str(src / "*")))
 
     b = str(tmp_path / "bm25")
-    # truth first (sequential streams: compaction must not run
-    # concurrently with another writer of the same co-located store),
-    # then bm25 whose hook folds BOTH stores every 2 batches
+    # truth first (sequential streams: the single-writer rule, which
+    # the writer locks enforce), then bm25 whose hook folds BOTH
+    # stores every 2 batches
     q = start_truth_stream(stream(), os.path.join(b, "truth"),
                            str(tmp_path / "ckpt_t"))
     q.awaitTermination(180)
@@ -341,8 +324,8 @@ def test_compact_every_hook_e2e_bounds_files_and_preserves_reads(
 
     # the hook fired at batch 3 (ids {0,1,2,3} -> fold {0,1,2}):
     # batch-dir count is bounded by K+1, not O(batches)
-    assert set(_batch_dirs(os.path.join(b, "tf"))) == {0, 3}
-    assert set(_batch_dirs(os.path.join(b, "truth", "prox"))) == {0, 3}
+    assert set(batch_ids(os.path.join(b, "tf"))) == {0, 3}
+    assert set(batch_ids(os.path.join(b, "truth", "prox"))) == {0, 3}
 
     # uncompacted, explicitly-threaded twin (the pre-hook spelling)
     b2 = str(tmp_path / "bm25_plain")

@@ -4,8 +4,9 @@
 #   bash tools/record_round.sh <round>   # e.g. 8 or 08 (zero-padded
 #   automatically: round 9 -> ORACLE_LOCAL_r09.txt)
 # Produces/refreshes: ORACLE_LOCAL_r{N}.txt, SCALE_SWEEP_r{N}.json,
-# BENCH_LOCAL_r{N}.json, PARALLELISM_r{N}.txt, and appends the dtype
-# audit to ORACLE_VERSIONS.txt. After it finishes: regenerate the
+# BENCH_LOCAL_r{N}.json, PARALLELISM_r{N}.txt, PYTEST_FULL_r{N}.txt
+# (the last 20 lines of the full-tier pytest run), and appends the
+# dtype audit to ORACLE_VERSIONS.txt. After it finishes: regenerate the
 # SCALE.md measured section via tools/gen_scale_table.py, update
 # BASELINE.md via tools/gen_baseline_table.py if bench moved, and
 # `wc -l` every record file before the final commit (background runs
@@ -21,7 +22,8 @@ N=$(printf '%02d' "$((10#${1:?round number}))")
 
 OUTS=("ORACLE_LOCAL_r${N}.txt" "SCALE_SWEEP_r${N}.json" \
       "SCALE_SWEEP_r${N}.log" "BENCH_LOCAL_r${N}.json" \
-      "BENCH_PASSES_r${N}.json" "PARALLELISM_r${N}.txt")
+      "BENCH_PASSES_r${N}.json" "PARALLELISM_r${N}.txt" \
+      "PYTEST_FULL_r${N}.txt")
 cleanup_on_fail() {
   echo "record_round.sh FAILED — deleting partial outputs: ${OUTS[*]}" >&2
   rm -f "${OUTS[@]}"
@@ -51,6 +53,11 @@ mv -f bench_passes_last.json "BENCH_PASSES_r${N}.json" 2>/dev/null || true
 python tools/parallelism_check.py /root/testdata/sf0.01 2>&1 \
   | grep -E '^(ok|MISMATCH|[0-9]+ invariant)' > "PARALLELISM_r${N}.txt"
 python tools/explain_audit.py 2>&1 | tail -1
+# full tier (slow tests included) — the gate for a round of record:
+# a failing suite fails the record; its tail still reaches the console
+SPARK_GRAFT_SLOW_TESTS=1 python -m pytest tests/ -q 2>&1 \
+  | tail -20 | tee "PYTEST_FULL_r${N}.txt"
 
 wc -l "ORACLE_LOCAL_r${N}.txt" "SCALE_SWEEP_r${N}.json" \
-      "BENCH_LOCAL_r${N}.json" "PARALLELISM_r${N}.txt"
+      "BENCH_LOCAL_r${N}.json" "PARALLELISM_r${N}.txt" \
+      "PYTEST_FULL_r${N}.txt"
