@@ -1,9 +1,11 @@
 """Tick-pipeline column expressions (reference parity, P1-P4 + S3-S5).
 
 Everything here is a pure Column expression over built-in functions, so the
-whole parse→route→derive chain stays inside whole-stage codegen — the Spark
-analog of the reference's hand-fused event loop (main.rs:65-135), but
-vectorized and distributed.
+whole parse→route→derive chain stays in the JVM — the Spark analog of the
+reference's hand-fused event loop (main.rs:65-135), but distributed. A
+filter on the derived ``message_type`` is pushed below ``route``'s one
+parse and re-parses each line once per field it reads, so the publish
+path drops Unknown in its encoder instead (streaming/encode.py).
 
 Semantic invariants reproduced (SURVEY.md §2.1):
   * blank lines skipped            (oanda_client.rs:51-53)
@@ -19,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..schemas import HEARTBEAT, PRICE_TICK
+from ..schemas import HEARTBEAT, PRICE_TICK, TICK_LINE
 
 
 def nonblank_lines(df: DataFrame, col: str = "value") -> DataFrame:
@@ -40,39 +42,35 @@ def route(df: DataFrame, col: str = "value") -> DataFrame:
     fallback (oanda_client.rs:66-78). Element-level PriceLevel
     validation is not enforced (documented divergence: from_json nulls
     a bad array element's field where serde rejects the whole message).
+
+    Each line is parsed once, over the union of the PriceTick and
+    Heartbeat fields: equal to one parse per schema, since a field that
+    fails to parse (a heartbeat's ``"asks":"bad"``) nulls itself alone
+    whatever ``spark.sql.json.enablePartialResults`` says (Spark 4.1). The
+    discriminator is the first ``type`` key (``from_json`` keeps the last).
     """
     v = F.col(col)
-    # get_json_object returns null for non-JSON input → used both for the
-    # malformed-line drop and for the discriminator.
-    is_json = F.get_json_object(v, "$").isNotNull()
-    pt = F.from_json(v, PRICE_TICK)
-    hb = F.from_json(v, HEARTBEAT)
+    # get_json_object is null for non-JSON input: S3, malformed JSON dropped
+    parsed = df.where(F.get_json_object(v, "$").isNotNull()).select(
+        v.alias("raw"), F.from_json(v, TICK_LINE).alias("line"),
+        (F.get_json_object(v, "$.type") == "HEARTBEAT").alias("is_hb"))
+    line, is_hb = F.col("line"), F.col("is_hb")
+    pt = F.struct(*[line[f].alias(f) for f in PRICE_TICK.fieldNames()])
+    hb = F.struct(*[line[f].alias(f) for f in HEARTBEAT.fieldNames()])
     # from_json yields null for a missing or type-mismatched field — the
-    # closest Spark analog of a serde deserialization failure.
-    pt_valid = (pt["asks"].isNotNull() & pt["bids"].isNotNull()
-                & pt["closeoutAsk"].isNotNull() & pt["closeoutBid"].isNotNull()
-                & pt["instrument"].isNotNull() & pt["status"].isNotNull()
-                & pt["time"].isNotNull())
-    hb_valid = hb["time"].isNotNull()
-    is_hb = F.get_json_object(v, "$.type") == "HEARTBEAT"
-    has_instrument = F.get_json_object(v, "$.instrument").isNotNull()
+    # closest Spark analog of a serde deserialization failure. A non-null
+    # `instrument` is one of them, so the has-instrument test is implied.
+    pt_valid = F.expr(" AND ".join(f"line.{f} IS NOT NULL"
+                                   for f in PRICE_TICK.fieldNames()))
     msg_type = (
-        F.when(is_hb & hb_valid, F.lit("heartbeat"))
-         .when(~is_hb & has_instrument & pt_valid, F.lit("price_tick"))
+        F.when(is_hb & line["time"].isNotNull(), F.lit("heartbeat"))
+         .when(~is_hb & pt_valid, F.lit("price_tick"))
          .otherwise(F.lit("unknown"))
     )
-    out = (
-        df.where(is_json)  # S3: malformed JSON dropped (logged upstream)
-          .withColumn("message_type", msg_type)
-          .withColumn(
-              "price_tick",
-              F.when(F.col("message_type") == "price_tick", pt))
-          .withColumn(
-              "heartbeat",
-              F.when(F.col("message_type") == "heartbeat", hb))
-          .withColumnRenamed(col, "raw")
-    )
-    return out.select("message_type", "price_tick", "heartbeat", "raw")
+    kind = F.col("message_type")
+    return parsed.withColumn("message_type", msg_type).select(
+        kind, F.when(kind == "price_tick", pt).alias("price_tick"),
+        F.when(kind == "heartbeat", hb).alias("heartbeat"), "raw")
 
 
 def price_as_double(c: Column) -> Column:
@@ -132,5 +130,5 @@ def derive_tick_columns(df: DataFrame) -> DataFrame:
 def publishable(df: DataFrame) -> DataFrame:
     """Sink-boundary filter: Unknown is retained in-engine but NEVER
     published (main.rs:117-119; proto oneof is closed,
-    proto/oanda_stream.proto:27-32)."""
+    proto/oanda_stream.proto:27-32). Not used by the publish path."""
     return df.where(F.col("message_type").isin("price_tick", "heartbeat"))

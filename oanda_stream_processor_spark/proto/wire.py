@@ -15,9 +15,9 @@ for the message shapes declared in the reference wire schema
   Timestamp         { int64 seconds = 1; int32 nanos = 2; }
 
 proto3 semantics honored: default values (empty string, 0) are omitted;
-oneof encodes exactly one branch. Used inside foreachBatch /
-mapInPandas — the encoder runs executor-side over Arrow batches, never
-on the driver.
+oneof encodes exactly one branch. Tags are constant bytes and values
+under 128 come from a table; the batch kernel (streaming/encode.py)
+calls the per-message functions below once per row.
 
 If google.protobuf becomes available, these bytes parse with the
 generated classes for the same .proto — the contract, not this encoder,
@@ -26,89 +26,80 @@ is the interface.
 
 from __future__ import annotations
 
-_WT_VARINT = 0
-_WT_LEN = 2
+_ONE_BYTE = [bytes((i,)) for i in range(128)]
 
 
 def _varint(n: int) -> bytes:
+    if 0 <= n < 128:
+        return _ONE_BYTE[n]
     if n < 0:
         n &= (1 << 64) - 1  # two's-complement 64-bit, per spec
     out = bytearray()
-    while True:
-        b = n & 0x7F
+    while n > 0x7F:
+        out.append((n & 0x7F) | 0x80)
         n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
+    out.append(n)
+    return bytes(out)
 
 
-def _tag(field: int, wire_type: int) -> bytes:
-    return _varint((field << 3) | wire_type)
+def _str(tag: bytes, s: str | None) -> bytes:
+    if not s:
+        return b""  # proto3: empty string -> omit
+    b = s.encode("utf-8")
+    return tag + _varint(len(b)) + b
 
 
-def _len_field(field: int, payload: bytes) -> bytes:
-    if not payload:
-        return b""  # proto3: empty string/message-bytes w/ no presence -> omit
-    return _tag(field, _WT_LEN) + _varint(len(payload)) + payload
-
-
-def _str_field(field: int, s: str | None) -> bytes:
-    return _len_field(field, s.encode("utf-8") if s else b"")
-
-
-def _uint_field(field: int, n: int | None) -> bytes:
+def _uint(tag: bytes, n: int | None) -> bytes:
     if not n:
         return b""  # proto3 default 0 -> omit
-    return _tag(field, _WT_VARINT) + _varint(n)
+    return tag + _varint(n)
+
+
+def _submsg(tag: bytes, payload: bytes) -> bytes:
+    """Submessage presence is explicit: encoded even when empty."""
+    return tag + _varint(len(payload)) + payload
+
+
+# constant tag bytes (field << 3 | wire type), by field number and type
+_LEN1, _LEN2, _LEN3, _LEN4, _LEN5, _LEN6, _LEN7 = (
+    _ONE_BYTE[f << 3 | 2] for f in range(1, 8))
+_INT1, _INT2 = _ONE_BYTE[1 << 3], _ONE_BYTE[2 << 3]
+_ENVELOPE = {"price_tick": _LEN1, "heartbeat": _LEN2}
 
 
 def encode_timestamp(seconds: int, nanos: int) -> bytes:
-    return _uint_field(1, seconds) + _uint_field(2, nanos)
-
-
-def _submsg_field(field: int, payload: bytes, force: bool = False) -> bytes:
-    """Submessage presence is explicit: encode even when empty if set."""
-    if payload == b"" and not force:
-        return b""
-    return _tag(field, _WT_LEN) + _varint(len(payload)) + payload
+    return _uint(_INT1, seconds) + _uint(_INT2, nanos)
 
 
 def encode_price_level(price: str | None, liquidity: int | None) -> bytes:
-    return _str_field(1, price) + _uint_field(2, liquidity or 0)
+    return _str(_LEN1, price) + _uint(_INT2, liquidity)
 
 
 def encode_price_tick(asks, bids, closeout_ask, closeout_bid,
                       instrument, status, ts_seconds, ts_nanos) -> bytes:
-    out = bytearray()
-    for lv in asks or []:
-        out += _submsg_field(1, encode_price_level(lv[0], lv[1]), force=True)
-    for lv in bids or []:
-        out += _submsg_field(2, encode_price_level(lv[0], lv[1]), force=True)
-    out += _str_field(3, closeout_ask)
-    out += _str_field(4, closeout_bid)
-    out += _str_field(5, instrument)
-    out += _str_field(6, status)
+    """``asks``/``bids`` are iterables of (price, liquidity); a null
+    price or liquidity encodes as its proto3 default."""
+    out = [_submsg(_LEN1, encode_price_level(p, q)) for p, q in asks or ()]
+    out += [_submsg(_LEN2, encode_price_level(p, q)) for p, q in bids or ()]
+    out += (_str(_LEN3, closeout_ask), _str(_LEN4, closeout_bid),
+            _str(_LEN5, instrument), _str(_LEN6, status))
     if ts_seconds is not None:
-        out += _submsg_field(7, encode_timestamp(ts_seconds, ts_nanos), force=True)
-    return bytes(out)
+        out.append(_submsg(_LEN7, encode_timestamp(ts_seconds, ts_nanos)))
+    return b"".join(out)
 
 
 def encode_heartbeat(ts_seconds, ts_nanos, hb_type: str | None) -> bytes:
-    out = bytearray()
+    out = b""
     if ts_seconds is not None:
-        out += _submsg_field(1, encode_timestamp(ts_seconds, ts_nanos), force=True)
-    out += _str_field(2, hb_type)
-    return bytes(out)
+        out = _submsg(_LEN1, encode_timestamp(ts_seconds, ts_nanos))
+    return out + _str(_LEN2, hb_type)
 
 
 def encode_stream_message(message_type: str, payload: bytes) -> bytes:
     """oneof envelope: price_tick=1, heartbeat=2 — the wire schema is
-    closed; anything else (Unknown) must not reach this encoder
-    (main.rs:117-119 parity is enforced upstream by publishable())."""
-    if message_type == "price_tick":
-        return _submsg_field(1, payload, force=True)
-    if message_type == "heartbeat":
-        return _submsg_field(2, payload, force=True)
-    raise ValueError(f"unpublishable message_type: {message_type!r}")
+    closed; anything else (Unknown) is refused here, and the batch
+    kernel drops it before calling (main.rs:117-119)."""
+    tag = _ENVELOPE.get(message_type)
+    if tag is None:
+        raise ValueError(f"unpublishable message_type: {message_type!r}")
+    return _submsg(tag, payload)

@@ -44,13 +44,9 @@ HEARTBEAT = T.StructType([
     T.StructField("type", T.StringType()),
 ])
 
-# Routed wide schema: one row per input line after parse+route (S3-S5).
-STREAM_MESSAGE = T.StructType([
-    T.StructField("message_type", T.StringType()),   # price_tick|heartbeat|unknown
-    T.StructField("price_tick", PRICE_TICK),
-    T.StructField("heartbeat", HEARTBEAT),
-    T.StructField("raw", T.StringType()),            # Unknown payload / provenance
-])
+# One tick line parsed once: PriceTick's fields plus Heartbeat's ``type``
+# (``time`` is shared); functions/ticks.route cuts both payloads from it.
+TICK_LINE = T.StructType(PRICE_TICK.fields + [HEARTBEAT["type"]])
 
 # --- fixture schemas (verified against /root/testdata parquet footers) ------
 

@@ -108,6 +108,10 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
+    # get_spark's local default heap is 16g, all the RAM of a 16 GB test
+    # host: a full-tier run once had its JVM killed by the OOM killer at
+    # 15.6 GB resident, and every later test failed on the dead JVM
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
     s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)
     yield s
 
