@@ -27,12 +27,14 @@ def main(argv: list[str] | None = None) -> int:
                     help="connect to the OANDA pricing stream (needs network)")
     ap.add_argument("-v", "--verbose", action="store_true",
                     help="print formatted messages to the console (K1)")
-    ap.add_argument("--publish", metavar="ZMQ_ADDR", nargs="?",
-                    const="env", help="publish protobuf messages on a ZMQ "
-                    "PUB socket (default addr from ZMQ_PUBLISHER_ADDRESS)")
-    ap.add_argument("--publish-file", metavar="PATH",
-                    help="publish length-prefixed protobuf frames to a file")
-    ap.add_argument("--parquet", metavar="DIR", help="durable parquet sink")
+    edge = ap.add_mutually_exclusive_group()
+    edge.add_argument("--publish", metavar="ZMQ_ADDR", nargs="?",
+                      const="env", help="publish protobuf messages on a ZMQ "
+                      "PUB socket (default addr from ZMQ_PUBLISHER_ADDRESS)")
+    edge.add_argument("--publish-file", metavar="PATH",
+                      help="publish length-prefixed protobuf frames to a file")
+    ap.add_argument("--parquet", metavar="DIR", help="durable parquet sink "
+                    "(read back, rows carry a batch_id column)")
     ap.add_argument("--checkpoint", metavar="DIR", default=None)
     args = ap.parse_args(argv)
 
@@ -44,6 +46,9 @@ def main(argv: list[str] | None = None) -> int:
         return 2
     if not args.replay:
         ap.error("one of --replay PATH or --live is required")
+    if not (args.verbose or args.publish or args.publish_file
+            or args.parquet):
+        ap.error("no sinks selected; pass -v, --publish[-file], or --parquet")
 
     from .session import get_spark
     from .streaming import sinks
@@ -70,10 +75,6 @@ def main(argv: list[str] | None = None) -> int:
                            publisher=publisher,
                            verbose=args.verbose,
                            parquet_out=args.parquet)
-    if not handles.queries:
-        print("no sinks selected; pass -v, --publish[-file], or --parquet",
-              file=sys.stderr)
-        return 2
     install_shutdown_handlers(handles)
     handles.process_all_available()
     handles.stop()

@@ -57,6 +57,10 @@ def get_spark(app_name: str = "oanda_stream_processor_spark",
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # -- python <-> jvm boundary ----------------------------------
+        # workers import this package from where the driver found it
+        .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(filter(None, (
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            os.environ.get("PYTHONPATH")))))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # -- scan sizing (100 TB: keep parquet splits ~128 MB) --------

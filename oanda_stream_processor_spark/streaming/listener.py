@@ -2,8 +2,9 @@
 /root/reference/src/main.rs:26-29 tracing setup + call sites).
 
 A StreamingQueryListener that logs progress/termination at INFO with the
-reference's '%Y-%m-%d %H:%M:%S%.3f' timestamp format; errors logged,
-never raised (one bad sink never stops the stream — invariant 4).
+reference's '%Y-%m-%d %H:%M:%S%.3f' timestamp format; a query's
+failure is logged, never raised (the failed epoch replays on restart,
+streaming/sinks.py's delivery contract).
 """
 
 from __future__ import annotations

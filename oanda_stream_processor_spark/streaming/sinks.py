@@ -1,24 +1,32 @@
-"""Sinks (K1/K2 parity + cluster-idiomatic analogs).
+"""The pipeline's output edges (K1/K2 parity + cluster analogs). Its one
+foreachBatch body (pipeline.py) feeds each micro-batch to every enabled
+edge, in this order: parquet (one ``store.py`` partial per epoch);
+partitioned publish (a publisher per task; the file stand-in writes
+``{base}.{epoch}.{partition}``; cluster analog: the Kafka sink); the
+console (K1, main.rs:83-85,105-107); the single PUB socket (K2,
+publisher.rs:10-25; pyzmq-gated, ``FilePublisher`` stands in).
 
-* console  — K1 (/root/reference/src/main.rs:83-85,105-107)
-* parquet  — durable file sink (exactly-once via checkpoint)
-* memory   — deterministic test sink (processAllAvailable)
-* zmq      — K2 (/root/reference/src/publisher.rs:10-25): PUB socket,
-  fire-and-forget per message; publish errors logged, never fatal
-  (main.rs:89-93). Gated on pyzmq availability; NDJSON-file publisher
-  stands in for tests so the foreachBatch plumbing is exercised either
-  way. At cluster scale the idiomatic analog is the Kafka sink with
-  binary `value` — same envelope bytes.
+DELIVERY CONTRACT. An epoch that does not commit replays whole on
+restart. The file edges are exactly-once, provided an epoch replays
+with the same partitioning: a replay overwrites the files its first
+attempt wrote. The single socket and the console are at-least-once: a
+restart may re-send one epoch (the reference is at-most-once).
+Per-message publish errors stay non-fatal inside the publisher
+(SURVEY.md invariant 4, main.rs:89-93). An edge that raises fails the
+epoch, so the checkpoint replays it: no edge silently loses data. The
+idempotent edges run first, so a failing file edge does not make the
+socket re-send.
 """
 
 from __future__ import annotations
 
 import logging
-import os
 
 import pyarrow as pa
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 
+from . import store
 from .encode import encode_batch, prepare
 
 log = logging.getLogger(__name__)
@@ -33,7 +41,7 @@ except ImportError:
 
 class ZmqPublisher:
     """PUB socket publisher (publisher.rs:10-25 semantics: bind once,
-    send per message, at-most-once)."""
+    send per message, fire-and-forget)."""
 
     def __init__(self, address: str = "tcp://*:9500"):
         if not HAVE_ZMQ:
@@ -50,15 +58,14 @@ class ZmqPublisher:
 
 
 class FilePublisher:
-    """Test stand-in: length-prefixed frames appended to a local file —
-    same at-most-once, fire-and-forget contract as the ZMQ PUB edge.
-    Holds the handle open (bind-once like the PUB socket); one flush per
-    message preserves the per-message visibility the tests rely on."""
+    """Length-prefixed frames to a local file, the handle held open
+    (bind-once like the PUB socket). It appends and flushes per message,
+    or with ``replace=True`` truncates on open (a replayed epoch
+    overwrites its first attempt) and flushes once, at close."""
 
-    def __init__(self, path: str, flush_each: bool = True):
-        self.path = path
-        self._flush_each = flush_each
-        self._f = open(path, "ab")  # noqa: SIM115 — lifetime = publisher
+    def __init__(self, path: str, replace: bool = False):
+        self._flush_each = not replace
+        self._f = open(path, "wb" if replace else "ab")  # noqa: SIM115
 
     def publish(self, payload: bytes) -> None:
         self._f.write(len(payload).to_bytes(4, "big") + payload)
@@ -70,19 +77,18 @@ class FilePublisher:
 
 
 class PartitionedFilePublisherFactory:
-    """Executor-side publisher factory for the partitioned publish path:
-    each partition opens its own frame file ``{base}.{uuid}`` (the file
-    analog of per-partition sockets). Fan-in = reading ``{base}.*``.
-    Picklable: carries only the base path."""
+    """Executor-side publisher factory for the partitioned edge: the task
+    of ``partition`` in ``epoch`` writes the frame file
+    ``{base}.{epoch}.{partition}`` (the file analog of per-partition
+    sockets), and a replay of the epoch overwrites it. Fan-in = reading
+    ``{base}.*``. Picklable: carries only the base path."""
 
     def __init__(self, base_path: str):
         self.base_path = base_path
 
-    def __call__(self) -> FilePublisher:
-        import uuid
-        # batch flush: the partition's close() flushes once, not per frame
-        return FilePublisher(f"{self.base_path}.{uuid.uuid4().hex}",
-                             flush_each=False)
+    def __call__(self, epoch: int, partition: int) -> FilePublisher:
+        return FilePublisher(f"{self.base_path}.{epoch}.{partition}",
+                             replace=True)
 
 
 def _publish_all(batches, publisher) -> int:
@@ -95,19 +101,21 @@ def _publish_all(batches, publisher) -> int:
 
 
 def publish_batch(batch_df: DataFrame, publisher) -> int:
-    """foreachBatch body of the single-socket edge (one PUB socket,
-    publisher.rs:10-25): every payload funnels through the driver, so it
-    encodes there too, after one Arrow collect (one job, no Python
-    worker), and publishes in row order. The driver holds one micro-batch,
-    which ``maxFilesPerTrigger`` bounds. Returns messages published."""
+    """The single-socket edge (one PUB socket, publisher.rs:10-25): every
+    payload funnels through the driver, so it encodes there too, after
+    one Arrow collect (one job, no Python worker), and publishes in row
+    order. The driver holds one micro-batch, which ``maxFilesPerTrigger``
+    bounds. Returns messages published."""
     return _publish_all(prepare(batch_df).toArrow().to_batches(), publisher)
 
 
-def publish_batch_partitioned(batch_df: DataFrame, publisher_factory) -> int:
+def publish_batch_partitioned(batch_df: DataFrame, publisher_factory,
+                              epoch: int = 0) -> int:
     """Partition-parallel publish: every task encodes its partition and
-    drains the payloads through its OWN publisher (opened in the task by
-    ``publisher_factory``), so nothing funnels through the driver and
-    throughput scales with partitions. Returns total messages published.
+    drains the payloads through its OWN publisher, opened in the task by
+    ``publisher_factory(epoch, partition)``, so nothing funnels through
+    the driver and throughput scales with partitions. Returns total
+    messages published.
 
     This is the Kafka-shaped edge: with real brokers the factory opens a
     producer (or a ZMQ socket that *connects* to an XSUB/forwarder
@@ -116,7 +124,7 @@ def publish_batch_partitioned(batch_df: DataFrame, publisher_factory) -> int:
     splits by size and core count, so the batch keeps its partitions."""
 
     def _drain(batches):
-        pub = publisher_factory()
+        pub = publisher_factory(epoch, TaskContext.get().partitionId())
         try:
             n = _publish_all(batches, pub)
         finally:
@@ -129,52 +137,14 @@ def publish_batch_partitioned(batch_df: DataFrame, publisher_factory) -> int:
     return sum(r.n for r in counts)
 
 
-def start_publish_stream_partitioned(stream_df: DataFrame, publisher_factory,
-                                     checkpoint_dir: str,
-                                     query_name: str = "publish_partitioned"):
-    """writeStream.foreachBatch wiring of the partition-parallel edge."""
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        n = publish_batch_partitioned(batch_df, publisher_factory)
-        log.info("epoch %s: published %d messages (partitioned)", epoch_id, n)
-
-    return (stream_df.writeStream
-            .queryName(query_name)
-            .option("checkpointLocation", os.path.join(checkpoint_dir, query_name))
-            .foreachBatch(_sink)
-            .start())
+def write_parquet(batch_df: DataFrame, out_dir: str, epoch: int) -> None:
+    """The epoch's rows as ``out_dir``'s partial ``epoch`` (read back,
+    they carry a ``batch_id`` column), under its single-writer lock."""
+    with store.writer_lock(out_dir):
+        store.write(batch_df, out_dir, store.ROOT, epoch)
 
 
-def start_publish_stream(stream_df: DataFrame, publisher,
-                         checkpoint_dir: str, query_name: str = "zmq_publish"):
-    """writeStream.foreachBatch wiring of the single-socket edge. A
-    micro-batch starts at most once a second: each pays a fixed cost
-    (file listing, planning, one job) whatever its size. At 200 msg/s on
-    4 vCPUs, back-to-back batches ran about 3 a second at 13 ms of CPU per
-    message; one a second took about 7 ms, at a median latency of 0.9 s."""
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        n = publish_batch(batch_df, publisher)
-        log.info("epoch %s: published %d messages", epoch_id, n)
-
-    return (stream_df.writeStream
-            .queryName(query_name)
-            .option("checkpointLocation", os.path.join(checkpoint_dir, query_name))
-            .foreachBatch(_sink)
-            .trigger(processingTime="1 second")
-            .start())
-
-
-def start_console_stream(stream_df: DataFrame, checkpoint_dir: str):
-    """K1: conditional console sink (the -v flag, main.rs:46-47)."""
-    return (stream_df.writeStream.format("console")
-            .option("truncate", "false")
-            .option("checkpointLocation", os.path.join(checkpoint_dir, "console"))
-            .start())
-
-
-def start_parquet_stream(stream_df: DataFrame, out_dir: str, checkpoint_dir: str):
-    return (stream_df.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(checkpoint_dir, "parquet"))
-            .start())
+def print_console(batch_df: DataFrame, epoch: int) -> None:
+    """K1: the console sink's block for one epoch."""
+    print(f"{'-' * 43}\nBatch: {epoch}\n{'-' * 43}")
+    batch_df.show(20, truncate=False)

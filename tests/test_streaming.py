@@ -56,7 +56,8 @@ def test_pipeline_publish_file_sink(spark, tick_capture, tmp_path):
 
 def test_pipeline_publish_partitioned(spark, tick_capture, tmp_path):
     # partition-parallel edge: one publisher per partition, frames fan
-    # into {base}.{uuid} files; total count is exactly the publishable set
+    # into {base}.{epoch}.{partition} files; total count is exactly the
+    # publishable set
     import glob
     from oanda_stream_processor_spark.streaming.sinks import (
         PartitionedFilePublisherFactory)
