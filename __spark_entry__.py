@@ -71,15 +71,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # by hidden jobs).  Four causes, all deliberate:
 #   * plan-gate probes: a bounded (~2k-doc) sampled statistic picks the
 #     physical plan before the frame exists (q178/q183/q189/q194
-#     MaxScore spread gate; q98/q136/q142/q166 calibration reads).
-#     r17: the probe VERDICT is memoized per corpus fingerprint
-#     (retrieval._gate_memo_key — input-file set), so only the FIRST
-#     construction per (kind, corpus) pays it: q178 warms the binary
-#     gate, q189 the three-way gate; q183/q194 then skip the probe but
-#     remain in this set because the sf0.001 fixture routes 'term',
-#     whose branch eagerly localCheckpoints its postings frames at
-#     build (a flat-routed corpus would build them lazily after the
-#     warmup — the memo-off profile is unchanged either way);
+#     MaxScore plan gate; q98/q136/q142/q166 calibration reads).
+#     r17: the probe's route is memoized per corpus fingerprint
+#     (retrieval._gate_memo_key — input-file set), and all four
+#     queries read the one plan gate, so only the FIRST of them built
+#     over a corpus pays it; the other three still belong in this set
+#     because the sf0.001 fixture routes 'term', whose branch eagerly
+#     localCheckpoints its postings frames at build (a flat-routed
+#     corpus would build them lazily after the warmup — the memo-off
+#     profile is unchanged either way);
 #   * eager localCheckpoints: multi-consumer frames (postings indexes,
 #     star edges, ANN codebooks) materialize once at build (q42/q44/
 #     q55-family, q87/q95, ANN q56/q88/q92/q128/q147/q148/q156);

@@ -7,11 +7,13 @@ cold; a ``None`` key never memoizes.  Inside ``bypass(name)`` the entry
 is not ``enabled``: nothing is read or written, and callers that
 checkpoint only so a memoized frame is cheap to re-read skip the
 checkpoint too, keeping the plan lazy.  ``counts()`` gives hit/miss
-totals per entry (a miss is any call that ran ``build``).
+totals per entry (a miss is any call that ran ``build``) and the
+seconds spent inside ``build``.
 """
 
 from __future__ import annotations
 
+import time
 from contextlib import contextmanager
 
 
@@ -19,6 +21,7 @@ class Entry:
     def __init__(self):
         self.enabled = True
         self.hits = self.misses = 0
+        self.build_s = 0.0
         self._values: dict = {}
 
     def get_or_build(self, key, build):
@@ -27,7 +30,9 @@ class Entry:
             self.hits += 1
             return self._values[key]
         self.misses += 1
+        t0 = time.perf_counter()
         value = build()
+        self.build_s += time.perf_counter() - t0
         if use:
             self._values[key] = value
         return value
@@ -65,7 +70,8 @@ def purge_all() -> None:
         e.clear()
 
 
-def counts() -> dict[str, int]:
-    """``{"<entry>.hits": n, "<entry>.misses": n, ...}``"""
+def counts() -> dict[str, float]:
+    """``{"<entry>.hits": n, "<entry>.misses": n, "<entry>.build_s":
+    s, ...}``"""
     return {f"{n}.{k}": getattr(e, k) for n, e in _ENTRIES.items()
-            for k in ("hits", "misses")}
+            for k in ("hits", "misses", "build_s")}

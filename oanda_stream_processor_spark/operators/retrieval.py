@@ -51,6 +51,8 @@ north-star LLM-pipeline surface, oracled like every other query.
 from __future__ import annotations
 
 import functools
+import json
+import logging
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -58,6 +60,10 @@ from pyspark.sql import functions as F
 from .. import memo
 from ..io import load_table
 from .similarity import sql_cosine, _cosine
+
+# a child of the C3 logger (streaming/listener.configure_logging): silent
+# unless a caller has configured it
+log = logging.getLogger("oanda_stream_processor_spark.retrieval")
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -719,131 +725,32 @@ def _gate_sidecar_store(key, verdict) -> None:
 def _gate_memo(kind: str):
     """Memoize a plan-gate probe ``probe(*frames)`` per corpus
     fingerprint: the in-memory memo, then the store sidecar (warming
-    the memo), then the probe (its verdict persisted to the sidecar)."""
+    the memo), then the probe (its verdict persisted to the sidecar).
+    Every call logs one JSON line naming the route and where it came
+    from: ``{"event": "plan_gate", "kind", "plan", "source":
+    "memo"|"sidecar"|"probe"}``."""
     def wrap(probe):
         @functools.wraps(probe)
         def gate(*frames: DataFrame):
             key = _gate_memo_key(kind, *frames)
+            source = "memo"
 
             def build():
+                nonlocal source
                 hit = None if key is None else _gate_sidecar_load(key)
+                source = "sidecar"
                 if hit is None:
+                    source = "probe"
                     hit = probe(*frames)
                     if key is not None:
                         _gate_sidecar_store(key, hit)
                 return hit
-            return _RETRIEVAL.get_or_build(key, build)
+            plan = _RETRIEVAL.get_or_build(key, build)
+            log.info(json.dumps({"event": "plan_gate", "kind": kind,
+                                 "plan": plan, "source": source}))
+            return plan
         return gate
     return wrap
-
-
-@_gate_memo("prunable")
-def maxscore_gate_is_prunable(d: DataFrame) -> bool:
-    """True iff some query has both a rare and a common term under the
-    sampled df-proportion cuts — the q178 plan gate (see block
-    comment).  Shape: one parquet-metadata count, then the bounded
-    sample (doc_id % MOD == 0, MOD scaled so the sample stays
-    ~MS_SAMPLE_TARGET docs at ANY corpus size) plus the query docs
-    through ONE Arrow task — the repo's single-task-finisher pattern
-    (dedup.py's union-find precedent).  A declarative df-proportion
-    plan costs ~6 tiny stage waves (~0.6 s of pure latency on
-    local[32], measured) for a statistic over ≤ ~2 k docs; the single
-    task reads the same bounded bytes with two waves.  Order-
-    independent by construction (set/count arithmetic), so partition
-    layout cannot change the verdict.  Memoized per corpus fingerprint
-    (_gate_memo_key — r17): the verdict is a corpus property, so a
-    rebuilt query over the same files skips the probe entirely."""
-    n_docs = d.count()  # parquet row-group metadata, no column read
-    if n_docs == 0:
-        return False
-    # mod scales with the corpus so n_s stays in [MS_SAMPLE_TARGET,
-    # 2·MS_SAMPLE_TARGET); corpora under the target sample fully
-    # (exact statistic) — no fixed floor (r12 ADVICE)
-    mod = max(1, n_docs // MS_SAMPLE_TARGET)
-    pick = (d.where((F.col("doc_id") % mod == 0)
-                    | (F.col("doc_id") < N_QUERIES))
-            .select("doc_id", "text").repartition(1))
-    def _gate(batches):
-        import pandas as pd
-        frames = list(batches)
-        if not frames:
-            yield pd.DataFrame({"sp": [False]})
-            return
-        pdf = pd.concat(frames, ignore_index=True)
-        term_sets = pdf.text.map(
-            lambda t: {x for x in (t or "").split(" ") if x})
-        yield pd.DataFrame(
-            {"sp": [_spread_decision(pdf.doc_id, term_sets, mod)]})
-
-    return bool(pick.mapInPandas(_gate, "sp boolean").first().sp)
-
-
-def _spread_decision(doc_ids, term_sets, mod: int) -> bool:
-    """The rare+common coexistence test over an in-hand sample —
-    ``doc_ids`` a pandas Series, ``term_sets`` an aligned Series of
-    per-doc distinct-term sets.  Shared by the text gate above and the
-    postings gate below so both read the SAME statistic.  Empty term
-    sets are excluded from n_s (r13 self-review): df proportions are
-    "share of documents that CAN carry a term", and a postings store
-    physically cannot see postings-free docs — counting them only on
-    the text side would skew the two gates apart.  Routing parity is
-    therefore exact on empty-free corpora (the pytest pin) and
-    approximate when empties shift the adaptive MOD; results are
-    exact on either branch regardless."""
-    nonempty = term_sets.map(bool)
-    is_s = (doc_ids % mod == 0) & nonempty
-    n_s = int(is_s.sum())
-    df_s: dict = {}
-    for ts in term_sets[is_s]:
-        for t in ts:
-            df_s[t] = df_s.get(t, 0) + 1
-    if n_s:
-        for ts in term_sets[doc_ids < N_QUERIES]:
-            ps = [df_s.get(t, 0) / n_s for t in ts]
-            if ps and min(ps) <= MS_RARE_P and max(ps) >= MS_COMMON_P:
-                return True
-    return False
-
-
-@_gate_memo("prunable_store")
-def maxscore_gate_from_postings(tf: DataFrame, dl: DataFrame) -> bool:
-    """The q178 plan gate evaluated over a STORED postings index
-    instead of raw text — the served-MaxScore router (r12 verdict ask
-    #6).  Same bounded shape as the text gate: one count over the
-    one-row-per-doc ``dl`` store (no postings read), then the sampled
-    docs' (cand_id, term) rows — already tokenized, so the sample read
-    is cheaper than the text gate's — through ONE Arrow task into the
-    SHARED ``_spread_decision``.  Routing matches the one-shot gate
-    exactly on corpora without empty documents (the pytest pin); with
-    empties the store cannot see postings-free docs, so n_docs (and
-    hence the adaptive MOD / sample membership) may differ from the
-    text side — the decision statistic itself already excludes
-    empties on both sides (see _spread_decision), and either branch
-    downstream is exact regardless of routing.  Memoized per store
-    fingerprint (_gate_memo_key — a store append changes the file set
-    and hence the key, so the probe re-runs exactly when the corpus
-    grew)."""
-    n_docs = dl.count()
-    if n_docs == 0:
-        return False
-    mod = max(1, n_docs // MS_SAMPLE_TARGET)
-    pick = (tf.where((F.col("cand_id") % mod == 0)
-                     | (F.col("cand_id") < N_QUERIES))
-            .select("cand_id", "term").repartition(1))
-
-    def _gate(batches):
-        import pandas as pd
-        frames = list(batches)
-        if not frames:
-            yield pd.DataFrame({"sp": [False]})
-            return
-        pdf = pd.concat(frames, ignore_index=True)
-        g = pdf.groupby("cand_id")["term"].agg(set)
-        ids = g.index.to_series().reset_index(drop=True)
-        sets = g.reset_index(drop=True)
-        yield pd.DataFrame({"sp": [_spread_decision(ids, sets, mod)]})
-
-    return bool(pick.mapInPandas(_gate, "sp boolean").first().sp)
 
 
 def term_upper_bounds(dfq: DataFrame, stats: DataFrame,
@@ -995,25 +902,12 @@ FROM bpool WHERE rank <= {TOP_K}
 def q178_bm25_maxscore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact MaxScore-pruned BM25 top-k (see block comment). Returns
     q175's output shape and, by the pruning-soundness argument, q175's
-    exact rows — the oracle IS q175's SQL.  The UB-spread gate picks
-    the plan: flat vocabulary -> q175's direct scoring (pruning cannot
-    win there and its phases are pure overhead); spread vocabulary ->
-    the seed/θ/essential machinery.  Either branch is exact."""
-    d = load_table(spark, sf_dir, "documents")
-    if not maxscore_gate_is_prunable(d):
-        # flat vocabulary: q175's plan verbatim — no postings
-        # checkpoint, no extra stage beyond the gate's sample read
-        return q175_bm25_topk(spark, sf_dir)
-    tf, dfq, dl, stats = corpus_term_frames(d)
-    tf = tf.localCheckpoint(eager=True)  # multi-consumer postings index
-    qterms = query_terms_from(tf)
-    cands, full_scores = maxscore_candidates(tf, dfq, dl, stats, qterms)
-    pool = _pool_rank(full_scores(cands),
-                      [F.desc("fp_sum"), F.asc("cand_id")], POOL)
-    return (pool.where(F.col("rank") <= TOP_K)
-            .select("query_id", "cand_id",
-                    (F.col("fp_sum") / F.lit(FP)).alias("score"),
-                    "rank"))
+    exact rows — the oracle IS q175's SQL.  The plan gate picks the
+    plan: flat vocabulary -> q175's direct scoring (pruning cannot win
+    there and its phases are pure overhead); spread vocabulary -> the
+    seed/θ/essential machinery.  q189's body with its 'block' route
+    taken as 'term'; either branch is exact."""
+    return _gated_bm25_topk(spark, sf_dir, blocks=False)
 
 
 # --- q189: block-max MaxScore (blocked postings + per-block impact UBs) --------
@@ -1063,21 +957,21 @@ def q178_bm25_maxscore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # streams past once, no shuffle beyond the groupBys that build the
 # bounded frames.
 #
-# PLAN GATE (the r13 ask's "prunability gate extended with the block
-# statistic"): routing is three-way now — "flat" (no UB spread: q175's
+# PLAN GATE: routing is three-way — "flat" (no UB spread: q175's
 # plan, pruning can't win), "term" (spread but tf-saturated postings:
 # q178's machinery — when typical tf is high, satur(max_tf, ·) ≈ k1+1
 # and block bounds collapse onto the whole-term bound, so the blocked
 # index adds joins for nothing), "block" (spread + headroom).  The
-# block statistic reuses the SAME bounded sample as the spread gate
-# (one Arrow task, ~2k docs) and measures the per-block TIGHTENING
-# available: headroom = 1 − tf_p90/(tf_p90 + k1·B(dl_p10)) — the
-# factor by which a typical block's bound sits below the analytic
-# bound, computed from the sample's p90 term frequency and p10 doc
-# length (quantiles, not maxima, so one pathological doc cannot flip
-# the route; conservative on the term side — underestimating headroom
-# only costs the block optimization, never correctness, and BOTH
-# branches are exact).
+# spread step is the q178 statistic (block comment above); the
+# headroom step reads the SAME bounded sample (one Arrow task, ~2k
+# docs) and measures the per-block TIGHTENING available: headroom =
+# 1 − tf_p90/(tf_p90 + k1·B(dl_p10)) — the factor by which a typical
+# block's bound sits below the analytic bound, computed from the
+# sample's p90 term frequency and p10 doc length (quantiles, not
+# maxima, so one pathological doc cannot flip the route; conservative
+# on the term side — underestimating headroom only costs the block
+# optimization, never correctness, and EVERY route is exact).  q178
+# and q183, which have no block route, read 'block' as 'term'.
 # ------------------------------------------------------------------------------
 BLOCK_DOCS = 64       # fixed doc-range block width (BMW-standard scale)
 BM_HEADROOM = 0.25    # min sampled per-block UB tightening to go "block"
@@ -1160,22 +1054,35 @@ def blockmax_candidates(tf: DataFrame, dfq: DataFrame, dl: DataFrame,
 
 
 def _plan_decision(doc_ids, term_counts, mod: int) -> str:
-    """The three-way q189 route over an in-hand sample — ``doc_ids`` a
+    """'flat' | 'term' | 'block' over an in-hand sample — ``doc_ids`` a
     pandas Series, ``term_counts`` an aligned Series of per-doc
-    term -> tf Counters.  The spread half IS q178's _spread_decision
-    (sets derived from the counters, so the prunable verdict matches
-    the binary gate exactly); the block half adds the sampled
+    term -> tf Counters.  First the spread step (the q178 block
+    comment): 'flat' unless some query carries both a rare and a
+    common term under the sampled df proportions.  Empty docs are
+    excluded from n_s: df proportions are "share of documents that CAN
+    carry a term", and a postings store physically cannot see
+    postings-free docs — counting them only on the text side would
+    skew the two gates apart.  Routing parity is therefore exact on
+    empty-free corpora (the pytest pin) and approximate when empties
+    shift the adaptive MOD.  Then the block step adds the sampled
     headroom statistic (q189 block comment).  Conservative-side-only:
     every route returns exact rows — the statistic picks cost, never
     correctness."""
-    term_sets = term_counts.map(lambda c: set(c))
-    if not _spread_decision(doc_ids, term_sets, mod):
-        return "flat"
     is_s = (doc_ids % mod == 0) & term_counts.map(bool)
+    n_s = int(is_s.sum())
+    df_s: dict = {}
+    for c in term_counts[is_s]:
+        for t in c:
+            df_s[t] = df_s.get(t, 0) + 1
+
+    def spread(c) -> bool:
+        ps = [df_s.get(t, 0) / n_s for t in c]
+        return bool(ps) and min(ps) <= MS_RARE_P and max(ps) >= MS_COMMON_P
+
+    if not n_s or not any(map(spread, term_counts[doc_ids < N_QUERIES])):
+        return "flat"
     tfs = [v for c in term_counts[is_s] for v in c.values()]
     dls = [sum(c.values()) for c in term_counts[is_s]]
-    if not tfs:
-        return "term"
     tfs.sort()
     dls.sort()
     tf90 = float(tfs[min(len(tfs) - 1, (len(tfs) * 9) // 10)])
@@ -1186,23 +1093,47 @@ def _plan_decision(doc_ids, term_counts, mod: int) -> str:
     return "block" if headroom >= BM_HEADROOM else "term"
 
 
-@_gate_memo("plan")
-def maxscore_gate_plan(d: DataFrame) -> str:
-    """'flat' | 'term' | 'block' — the q189 plan gate over raw text:
-    the q178 sampled-statistic shape verbatim (one metadata count +
-    one bounded Arrow task over ~MS_SAMPLE_TARGET docs), extended
-    with the block-headroom statistic.  The prunable half reads the
-    SAME _spread_decision as maxscore_gate_is_prunable, so
-    (plan != 'flat') == the binary gate on any corpus.  Memoized per
-    corpus fingerprint (_gate_memo_key — r17, the binary gate's
-    convention)."""
-    n_docs = d.count()
+def _text_counts(pdf):
+    """(doc ids, per-doc term -> tf Counters) of sampled raw text."""
+    from collections import Counter
+    return pdf.doc_id, pdf.text.map(
+        lambda t: Counter(x for x in (t or "").split(" ") if x))
+
+
+def _postings_counts(pdf):
+    """(doc ids, per-doc term -> tf Counters) of sampled stored
+    postings.  List-agg then rowwise Counter: the version-agnostic
+    shape (groupby().apply(..., include_groups=False) needs pandas
+    >= 2.2 on executors, while the text side runs on any pandas —
+    r14 ADVICE: keep the two gates' floor equal)."""
+    from collections import Counter
+    tl = (pdf.groupby("cand_id")
+          .agg(term=("term", list), tf=("tf", list)))
+    ids = tl.index.to_series().reset_index(drop=True)
+    counts = (tl.apply(lambda r: Counter(dict(zip(r["term"], r["tf"]))),
+                       axis=1)
+              .reset_index(drop=True))
+    return ids, counts
+
+
+def _sampled_plan(n_docs: int, rows: DataFrame, to_counts) -> str:
+    """The body both plan gates share.  ``rows`` is keyed by its first
+    column (a doc id); the bounded sample (id % MOD == 0, MOD scaled
+    so the sample stays ~MS_SAMPLE_TARGET docs at ANY corpus size;
+    corpora under the target sample fully — no fixed floor, r12
+    ADVICE) plus the query docs goes through ONE Arrow task — the
+    repo's single-task-finisher pattern (dedup.py's union-find
+    precedent): a declarative df-proportion plan costs ~6 tiny stage
+    waves (~0.6 s of pure latency on local[32], measured) for a
+    statistic over ≤ ~2 k docs.  ``to_counts`` turns the sampled
+    pandas rows into (ids, Counters) for _plan_decision, which is
+    order-independent (set/count arithmetic), so partition layout
+    cannot change the route."""
     if n_docs == 0:
         return "flat"
     mod = max(1, n_docs // MS_SAMPLE_TARGET)
-    pick = (d.where((F.col("doc_id") % mod == 0)
-                    | (F.col("doc_id") < N_QUERIES))
-            .select("doc_id", "text").repartition(1))
+    key = F.col(rows.columns[0])
+    pick = rows.where((key % mod == 0) | (key < N_QUERIES)).repartition(1)
 
     def _gate(batches):
         import pandas as pd
@@ -1210,59 +1141,64 @@ def maxscore_gate_plan(d: DataFrame) -> str:
         if not frames:
             yield pd.DataFrame({"plan": ["flat"]})
             return
-        from collections import Counter
-        pdf = pd.concat(frames, ignore_index=True)
-        counts = pdf.text.map(
-            lambda t: Counter(x for x in (t or "").split(" ") if x))
-        yield pd.DataFrame(
-            {"plan": [_plan_decision(pdf.doc_id, counts, mod)]})
+        ids, counts = to_counts(pd.concat(frames, ignore_index=True))
+        yield pd.DataFrame({"plan": [_plan_decision(ids, counts, mod)]})
 
     return str(pick.mapInPandas(_gate, "plan string").first().plan)
+
+
+@_gate_memo("plan")
+def maxscore_gate_plan(d: DataFrame) -> str:
+    """'flat' | 'term' | 'block' — the MaxScore plan gate over raw
+    text (q178/q183 prune unless 'flat'; q189/q194 take all three
+    routes).  n_docs is one parquet-metadata count (no column read).
+    Memoized per corpus fingerprint (_gate_memo_key — r17): the route
+    is a corpus property, so a rebuilt query over the same files skips
+    the probe entirely."""
+    return _sampled_plan(d.count(), d.select("doc_id", "text"),
+                         _text_counts)
 
 
 @_gate_memo("plan_store")
 def maxscore_gate_plan_from_postings(tf: DataFrame,
                                      dl: DataFrame) -> str:
-    """The q189 plan gate over a STORED postings index — the
-    maxscore_gate_from_postings shape (sampled (cand_id, term, tf)
-    rows through one Arrow task) feeding the SAME _plan_decision, so
-    served block-max reads route like the one-shot on empty-free
-    corpora (the q178 gate-pair contract, including its documented
-    MOD-boundary divergence on corpora with postings-free docs).
+    """The plan gate over a STORED postings index — the served-read
+    router.  n_docs is one count over the one-row-per-doc ``dl`` store
+    (no postings read); the sample is the sampled docs' (cand_id,
+    term, tf) rows, already tokenized, so it reads less than the text
+    gate.  Served reads route like the one-shot on empty-free corpora;
+    with empties the store cannot see postings-free docs, so n_docs
+    (and hence the adaptive MOD / sample membership) may differ from
+    the text side, and every route downstream is exact regardless.
     Memoized per store fingerprint (_gate_memo_key — appends change
-    the file set, re-running the probe exactly when the corpus
-    grew)."""
-    n_docs = dl.count()
-    if n_docs == 0:
-        return "flat"
-    mod = max(1, n_docs // MS_SAMPLE_TARGET)
-    pick = (tf.where((F.col("cand_id") % mod == 0)
-                     | (F.col("cand_id") < N_QUERIES))
-            .select("cand_id", "term", "tf").repartition(1))
+    the file set, re-running the probe exactly when the corpus grew)
+    and persisted next to the store (_GATE_SIDECAR)."""
+    return _sampled_plan(dl.count(), tf.select("cand_id", "term", "tf"),
+                         _postings_counts)
 
-    def _gate(batches):
-        import pandas as pd
-        frames = list(batches)
-        if not frames:
-            yield pd.DataFrame({"plan": ["flat"]})
-            return
-        from collections import Counter
-        pdf = pd.concat(frames, ignore_index=True)
-        # list-agg then rowwise Counter: the version-agnostic shape
-        # (groupby().apply(..., include_groups=False) needs pandas
-        # >= 2.2 on executors, while the sibling binary gate runs on
-        # any pandas — r14 ADVICE: keep the two gates' floor equal)
-        tl = (pdf.groupby("cand_id")
-              .agg(term=("term", list), tf=("tf", list)))
-        ids = tl.index.to_series().reset_index(drop=True)
-        counts = (tl.apply(lambda r: Counter(dict(zip(r["term"],
-                                                      r["tf"]))),
-                           axis=1)
-                  .reset_index(drop=True))
-        yield pd.DataFrame(
-            {"plan": [_plan_decision(ids, counts, mod)]})
 
-    return str(pick.mapInPandas(_gate, "plan string").first().plan)
+def _gated_bm25_topk(spark: SparkSession, sf_dir: str, *,
+                     blocks: bool) -> DataFrame:
+    """The body of q178 (``blocks=False``: a 'block' route runs as
+    'term') and q189 (all three routes); see their docstrings."""
+    d = load_table(spark, sf_dir, "documents")
+    plan = maxscore_gate_plan(d)
+    if plan == "flat":
+        # q175's plan verbatim — no postings checkpoint, no extra
+        # stage beyond the gate's sample read
+        return q175_bm25_topk(spark, sf_dir)
+    tf, dfq, dl, stats = corpus_term_frames(d)
+    tf = tf.localCheckpoint(eager=True)  # multi-consumer postings index
+    qterms = query_terms_from(tf)
+    candidates = (blockmax_candidates if blocks and plan == "block"
+                  else maxscore_candidates)
+    cands, full_scores = candidates(tf, dfq, dl, stats, qterms)
+    pool = _pool_rank(full_scores(cands),
+                      [F.desc("fp_sum"), F.asc("cand_id")], POOL)
+    return (pool.where(F.col("rank") <= TOP_K)
+            .select("query_id", "cand_id",
+                    (F.col("fp_sum") / F.lit(FP)).alias("score"),
+                    "rank"))
 
 
 @query("q189_bm25_blockmax_topk", f"""{SQL_BM25_POOL}
@@ -1278,25 +1214,7 @@ def q189_bm25_blockmax_topk(spark: SparkSession,
     whole-term machinery (saturated postings, block bounds collapse);
     block -> the blocked skip.  Every branch is exact — the oracle is
     q175's SQL verbatim, the q178 precedent."""
-    d = load_table(spark, sf_dir, "documents")
-    plan = maxscore_gate_plan(d)
-    if plan == "flat":
-        return q175_bm25_topk(spark, sf_dir)
-    tf, dfq, dl, stats = corpus_term_frames(d)
-    tf = tf.localCheckpoint(eager=True)  # multi-consumer postings index
-    qterms = query_terms_from(tf)
-    if plan == "term":
-        cands, full_scores = maxscore_candidates(tf, dfq, dl, stats,
-                                                 qterms)
-    else:
-        cands, full_scores = blockmax_candidates(tf, dfq, dl, stats,
-                                                 qterms)
-    pool = _pool_rank(full_scores(cands),
-                      [F.desc("fp_sum"), F.asc("cand_id")], POOL)
-    return (pool.where(F.col("rank") <= TOP_K)
-            .select("query_id", "cand_id",
-                    (F.col("fp_sum") / F.lit(FP)).alias("score"),
-                    "rank"))
+    return _gated_bm25_topk(spark, sf_dir, blocks=True)
 
 
 # --- q179: phrase retrieval over positional postings ---------------------------
@@ -1589,7 +1507,7 @@ def q183_bm25f_maxscore_topk(spark: SparkSession,
     rows from a pruned candidate set, plan-gated on the same sampled
     df-proportion statistic as q178."""
     d = load_table(spark, sf_dir, "documents")
-    if not maxscore_gate_is_prunable(d):
+    if maxscore_gate_plan(d) == "flat":
         return q177_bm25f_topk(spark, sf_dir)
     tff, dlf, dfd, ndocs, avgf = corpus_field_frames(d)
     tff = tff.localCheckpoint(eager=True)
@@ -1645,9 +1563,10 @@ def q183_bm25f_maxscore_topk(spark: SparkSession,
 # Fixed-point care: UB_blk is ceil'd with the q178 +2 ulp margin so
 # UB_blk_fp ≥ every SNAPPED fp(t, d) in the block.
 #
-# Plan gate: the SAME three-way sampled statistic as q189
-# (maxscore_gate_plan — spread picks flat vs pruned, headroom picks
-# term vs block).  The headroom statistic is computed on the plain
+# Plan gate: the one MaxScore plan gate, maxscore_gate_plan (its
+# spread step picks flat vs pruned, its headroom step term vs block;
+# q183 over the same corpus reads the same memoized route, taking
+# 'block' as 'term').  The headroom statistic is computed on the plain
 # tf/dl shape; for the field model it is a PROXY (the field split is
 # a deterministic position rule over the same sampled tokens, so the
 # tf/dl concentration it measures is the same phenomenon that gives

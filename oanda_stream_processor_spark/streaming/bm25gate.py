@@ -179,105 +179,42 @@ def serve_bm25_pool(spark: SparkSession, state_dir: str) -> DataFrame:
 
 
 def serve_bm25_topk(spark: SparkSession, state_dir: str, *,
-                    prune: bool | None = None,
+                    plan: str | None = None,
                     theta: str = "auto") -> DataFrame:
     """q175's output shape (query_id, cand_id, score, rank ≤ TOP_K)
-    from the incremental store, routed through the q178 MaxScore plan
-    gate (r12 verdict ask #6): when the STORED corpus is prunable
-    (some query's sampled df proportions carry both a rare and a
-    common term — ``retrieval.maxscore_gate_from_postings``, the same
-    statistic as one-shot q178 evaluated over stored postings), the
-    read scores only the seed/θ/essential candidate set; otherwise it
-    keeps the full-pool plan (q175's shape over stored postings).
-    Both branches are exact — the MaxScore soundness argument does not
-    depend on where the postings came from — and pytest pins pruned ≡
-    unpruned row-for-row on flat and Zipfian stored corpora.
-    ``prune`` forces a branch (tests); None lets the gate decide.
+    from the incremental store, routed through the MaxScore plan gate
+    evaluated over stored postings
+    (``retrieval.maxscore_gate_plan_from_postings``, the one-shot
+    q189 statistic): 'flat' keeps the full-pool plan (q175's shape
+    over stored postings); 'term' scores only q178's seed/θ/essential
+    candidate set; 'block' adds the blocked skip, reading the
+    PERSISTED blocked layout (read_block_stats' MAX/MIN merge) instead
+    of rebuilding it from postings, so appending a batch keeps the
+    skip index current at the cost of one batch-local aggregate.
+    Every route is exact — the MaxScore and block-max soundness
+    arguments do not depend on where the postings came from — and
+    pytest pins all three routes row-for-row equal per append prefix
+    on flat, Zipfian and block-skewed stored corpora.  ``plan``
+    forces a route (tests); None lets the gate decide, so a default
+    read takes the block route wherever the gate says 'block' (the
+    served twin of q189, not of q178).
 
-    r15 (r14 verdict ask #3 — the θ store folded into the default
-    read): the pruned branch prefers the PERSISTED lockstep impact
-    histogram (<state_dir>/impact, write_batch_partials' sixth
-    partial) to derive θ, replacing the read-time seed-scoring pass
-    with bounded arithmetic over the merged sketch; stores without
-    the impact layout (pre-r15) keep the seed pass.  ``theta``
-    routes: 'auto' (default — histogram when present), 'seed'
-    (force the seed pass), 'hist' (require the histogram — raises on
-    stores without one).  Every route is exact: the histogram θ is a
-    certified lower bound (thetagate soundness, lockstep layout) and
-    the essential split only needs a lower bound; pytest pins
-    hist ≡ seed ≡ unpruned per append prefix.  A flat-routed read has
-    no θ at all, so an EXPLICIT theta='hist' there raises instead of
-    being silently ignored (r17 ADVICE — the same loud contract as a
-    missing impact/ layout); 'auto' and 'seed' route flat silently."""
-    from ..operators.retrieval import (
-        POOL,
-        _pool_rank,
-        maxscore_candidates,
-        maxscore_gate_from_postings,
-    )
-    if theta not in ("auto", "seed", "hist"):
-        raise ValueError(f"theta must be auto|seed|hist, got {theta!r}")
-    if prune is None:
-        prune = maxscore_gate_from_postings(
-            read_tf(spark, state_dir), read_dl(spark, state_dir))
-    if not prune:
-        if theta == "hist":
-            raise ValueError(
-                "theta='hist' but the spread gate routed the full-pool "
-                "plan — there is no θ to derive (force prune=True, or "
-                "use theta='auto'/'seed', which route the flat plan "
-                "silently)")
-        return (serve_bm25_pool(spark, state_dir)
-                .where(F.col("rank") <= TOP_K)
-                .select("query_id", "cand_id",
-                        (F.col("fp_sum") / F.lit(FP)).alias("score"),
-                        "rank"))
-    if theta != "seed":
-        from .thetagate import hist_theta_pruned_topk, maybe_read_impact_hist
-        hist = maybe_read_impact_hist(spark, state_dir)
-        if hist is not None:
-            return hist_theta_pruned_topk(spark, state_dir, hist)
-        if theta == "hist":
-            raise ValueError(
-                f"theta='hist' but {state_dir} has no impact/ layout "
-                "(pre-r15 store — re-ingest or use theta='seed')")
-    # pruned read — q178's machinery over the stored frames
-    tf = read_tf(spark, state_dir).localCheckpoint(eager=True)
-    qterms = query_terms_from(tf)
-    cands, full_scores = maxscore_candidates(
-        tf, read_term_df(spark, state_dir), read_dl(spark, state_dir),
-        read_corpus_stats(spark, state_dir), qterms)
-    pool = _pool_rank(full_scores(cands),
-                      [F.desc("fp_sum"), F.asc("cand_id")], POOL)
-    return (pool.where(F.col("rank") <= TOP_K)
-            .select("query_id", "cand_id",
-                    (F.col("fp_sum") / F.lit(FP)).alias("score"),
-                    "rank"))
-
-
-def serve_bm25_blockmax_topk(spark: SparkSession, state_dir: str, *,
-                             plan: str | None = None,
-                             theta: str = "auto") -> DataFrame:
-    """q175's output shape served from the incremental store through
-    the BLOCK-MAX machinery (r14; r13 verdict ask #1's serving half):
-    the three-way q189 plan gate evaluated over stored postings picks
-    flat (full-pool plan) / term (q178 whole-term pruning) / block —
-    and the block branch reads the PERSISTED blocked layout
-    (read_block_stats' MAX/MIN merge) instead of rebuilding it from
-    postings, so appending a batch keeps the skip index current at
-    the cost of one batch-local aggregate.  Every branch is exact
-    (the q189 soundness argument is source-independent); pytest pins
-    all three branches row-for-row equal per append prefix on flat,
-    Zipfian, and block-skewed stored corpora.  ``plan`` forces a
-    branch (tests); None lets the gate decide.
-
-    r15: like serve_bm25_topk, the pruned branches prefer the
-    PERSISTED lockstep impact histogram for θ (no seed-scoring pass —
-    the block branch then combines θ_lb's essential split WITH the
-    blocked skip, both priced from stored state; thetagate.
-    hist_theta_pruned_topk blocks=True for the soundness note);
-    ``theta`` routes as there ('auto' | 'seed' | 'hist'), including
-    the loud hist-on-flat contract (r17 ADVICE)."""
+    The pruned routes prefer the PERSISTED lockstep impact histogram
+    (<state_dir>/impact, write_batch_partials' sixth partial) to
+    derive θ, replacing the read-time seed-scoring pass with bounded
+    arithmetic over the merged sketch (thetagate.
+    hist_theta_pruned_topk; on the block route θ_lb's essential split
+    combines WITH the blocked skip); stores without the impact layout
+    (pre-r15) keep the seed pass.  ``theta`` routes: 'auto' (default —
+    histogram when present), 'seed' (force the seed pass), 'hist'
+    (require the histogram — raises on stores without one).  Every
+    route is exact: the histogram θ is a certified lower bound
+    (thetagate soundness, lockstep layout) and the essential split
+    only needs a lower bound; pytest pins hist ≡ seed ≡ flat per
+    append prefix.  A flat-routed read has no θ at all, so an
+    EXPLICIT theta='hist' there raises instead of being silently
+    ignored (r17 ADVICE — the same loud contract as a missing
+    impact/ layout); 'auto' and 'seed' route flat silently."""
     from ..operators.retrieval import (
         POOL,
         _pool_rank,
@@ -297,31 +234,35 @@ def serve_bm25_blockmax_topk(spark: SparkSession, state_dir: str, *,
                 "full-pool plan has no θ to derive (force plan='term'/"
                 "'block', or use theta='auto'/'seed', which route "
                 "flat silently)")
-        return serve_bm25_topk(spark, state_dir, prune=False)
-    if theta != "seed":
-        from .thetagate import hist_theta_pruned_topk, maybe_read_impact_hist
-        hist = maybe_read_impact_hist(spark, state_dir)
-        if hist is not None:
-            return hist_theta_pruned_topk(spark, state_dir, hist,
-                                          blocks=(plan == "block"))
-        if theta == "hist":
-            raise ValueError(
-                f"theta='hist' but {state_dir} has no impact/ layout "
-                "(pre-r15 store — re-ingest or use theta='seed')")
-    tf = read_tf(spark, state_dir).localCheckpoint(eager=True)
-    qterms = query_terms_from(tf)
-    dfq = read_term_df(spark, state_dir)
-    dl = read_dl(spark, state_dir)
-    stats = read_corpus_stats(spark, state_dir)
-    if plan == "term":
-        cands, full_scores = maxscore_candidates(tf, dfq, dl, stats,
-                                                 qterms)
+        pool = serve_bm25_pool(spark, state_dir)
     else:
-        cands, full_scores = blockmax_candidates(
-            tf, dfq, dl, stats, qterms,
-            blk=maybe_read_block_stats(spark, state_dir))
-    pool = _pool_rank(full_scores(cands),
-                      [F.desc("fp_sum"), F.asc("cand_id")], POOL)
+        if theta != "seed":
+            from .thetagate import (
+                hist_theta_pruned_topk,
+                maybe_read_impact_hist,
+            )
+            hist = maybe_read_impact_hist(spark, state_dir)
+            if hist is not None:
+                return hist_theta_pruned_topk(spark, state_dir, hist,
+                                              blocks=(plan == "block"))
+            if theta == "hist":
+                raise ValueError(
+                    f"theta='hist' but {state_dir} has no impact/ layout "
+                    "(pre-r15 store — re-ingest or use theta='seed')")
+        tf = read_tf(spark, state_dir).localCheckpoint(eager=True)
+        qterms = query_terms_from(tf)
+        dfq = read_term_df(spark, state_dir)
+        dl = read_dl(spark, state_dir)
+        stats = read_corpus_stats(spark, state_dir)
+        if plan == "term":
+            cands, full_scores = maxscore_candidates(tf, dfq, dl, stats,
+                                                     qterms)
+        else:
+            cands, full_scores = blockmax_candidates(
+                tf, dfq, dl, stats, qterms,
+                blk=maybe_read_block_stats(spark, state_dir))
+        pool = _pool_rank(full_scores(cands),
+                          [F.desc("fp_sum"), F.asc("cand_id")], POOL)
     return (pool.where(F.col("rank") <= TOP_K)
             .select("query_id", "cand_id",
                     (F.col("fp_sum") / F.lit(FP)).alias("score"),

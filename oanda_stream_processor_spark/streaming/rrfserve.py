@@ -379,7 +379,7 @@ def serve_retrieval_quality(spark: SparkSession, bm25_state: str,
                             truth_state: str | None = "auto") -> DataFrame:
     """q185's per-query ranking-quality metrics served ENTIRELY from
     three persisted stores: the system ranking from the incremental
-    BM25 store (through the q178-gated serve_bm25_topk), the
+    BM25 store (through the plan-gated serve_bm25_topk), the
     coverage/proximity truth tiers from the token-positional postings
     store, and the phrase tier from the trigram-positional store.
     Every half is a shared core (quality_metrics_from,

@@ -5,8 +5,9 @@ THE PROBLEM: θ — the POOL-th best true BM25 score per query — is a
 RANK statistic, not SUM-mergeable (ROADMAP names it "NOT mergeable"),
 and no stored SCORE can survive corpus growth anyway: every per-term
 idf moves when df/n_docs change, in either direction.  The one-shot
-q178 plan and the served serve_bm25_topk both pay a seed-scoring pass
-at read time to obtain θ.
+q178/q189 plans pay a seed-scoring pass at read time to obtain θ, and
+so does the served serve_bm25_topk on a store without this histogram
+(or with theta='seed').
 
 THE HISTOGRAM WAY AROUND IT (the histgate pattern, conservative-side-
 only): don't store scores — store the SCORE-FREE per-posting facts
@@ -176,50 +177,42 @@ def hist_not_ahead(spark: SparkSession, bm25_state: str,
 
 def serve_bm25_topk_hist_theta(spark: SparkSession, bm25_state: str,
                                theta_state: str | None = None, *,
-                               prune: bool | None = None) -> DataFrame:
+                               plan: str | None = None) -> DataFrame:
     """q175's output shape served from the incremental BM25 store with
     the pruning θ derived from the PERSISTED histogram instead of a
     read-time seed-scoring pass.  Routed through the same stored-
-    postings spread gate as serve_bm25_topk; the pruned branch runs
-    the shared essential split with θ_lb and scores the essential-
-    matched candidate set once — exact for any θ lower bound that
-    satisfies the soundness precondition (module docstring),
-    pytest-pinned pruned ≡ unpruned per append prefix on flat and
-    Zipfian stored corpora.  ``theta_state=None`` reads the canonical
-    lockstep histogram (<bm25_state>/impact — sound by construction);
-    an explicit external store is admitted through the hist_not_ahead
-    guard, falling back to the seed-scoring read (exact, just slower)
-    when the histogram may describe docs the postings store lacks.
-    ``prune`` forces a branch (tests); None lets the gate decide."""
-    from ..operators.retrieval import maxscore_gate_from_postings
-    from .bm25gate import (
-        read_dl,
-        read_tf,
-        serve_bm25_pool,
-        serve_bm25_topk,
-    )
+    postings plan gate as serve_bm25_topk; the pruned routes run the
+    shared essential split with θ_lb (plus the blocked skip on the
+    'block' route) and score the essential-matched candidate set
+    once — exact for any θ lower bound that satisfies the soundness
+    precondition (module docstring), pytest-pinned pruned ≡ flat per
+    append prefix on flat and Zipfian stored corpora.
+    ``theta_state=None`` reads the canonical lockstep histogram
+    (<bm25_state>/impact — sound by construction); an explicit
+    external store is admitted through the hist_not_ahead guard,
+    falling back to the seed-scoring read (exact, just slower) when
+    the histogram may describe docs the postings store lacks.
+    ``plan`` forces a route (tests); None lets the gate decide."""
+    from ..operators.retrieval import maxscore_gate_plan_from_postings
+    from .bm25gate import read_dl, read_tf, serve_bm25_topk
 
     if theta_state is not None and not hist_not_ahead(spark, bm25_state,
                                                       theta_state):
         # external histogram may describe docs the store lacks: its
         # θ is not a certified lower bound — take the seed-pass read
         # (exact regardless; module docstring, r14 ADVICE)
-        return serve_bm25_topk(spark, bm25_state, prune=prune,
+        return serve_bm25_topk(spark, bm25_state, plan=plan,
                                theta="seed")
-
-    if prune is None:
-        prune = maxscore_gate_from_postings(
+    if plan is None:
+        plan = maxscore_gate_plan_from_postings(
             read_tf(spark, bm25_state), read_dl(spark, bm25_state))
-    if not prune:
-        return (serve_bm25_pool(spark, bm25_state)
-                .where(F.col("rank") <= TOP_K)
-                .select("query_id", "cand_id",
-                        (F.col("fp_sum") / F.lit(FP)).alias("score"),
-                        "rank"))
+    if plan == "flat":
+        return serve_bm25_topk(spark, bm25_state, plan="flat")
     hist = (store.read(spark, bm25_state, store.IMPACT)
             if theta_state is None
             else read_impact_hist(spark, theta_state))
-    return hist_theta_pruned_topk(spark, bm25_state, hist)
+    return hist_theta_pruned_topk(spark, bm25_state, hist,
+                                  blocks=(plan == "block"))
 
 
 def maybe_read_impact_hist(spark: SparkSession,

@@ -10,6 +10,7 @@ from __future__ import annotations
 import ast
 import os
 import re
+import time
 
 import pytest
 
@@ -27,17 +28,22 @@ def test_get_or_build_hits_and_misses():
 
     def build():
         calls.append(1)
+        time.sleep(0.02)
         return len(calls)
 
-    h0, m0 = e.hits, e.misses
+    h0, m0, s0 = e.hits, e.misses, e.build_s
     assert e.get_or_build("k", build) == 1
+    s1 = e.build_s
+    assert s1 - s0 >= 0.02          # a miss times its build
     assert e.get_or_build("k", build) == 1
+    assert e.build_s == s1          # a hit adds no build time
     assert e.get_or_build("j", build) == 2
+    assert e.build_s - s1 >= 0.02
     assert (e.hits - h0, e.misses - m0) == (1, 2)
     assert e.keys() == {"k", "j"}
     c = memo.counts()
-    assert (c["test_counts.hits"], c["test_counts.misses"]) == (e.hits,
-                                                              e.misses)
+    assert (c["test_counts.hits"], c["test_counts.misses"],
+            c["test_counts.build_s"]) == (e.hits, e.misses, e.build_s)
 
 
 def test_falsy_values_are_hits():

@@ -170,10 +170,11 @@ def test_maxscore_actually_prunes(spark):
 
 
 def test_maxscore_spread_gate_routing(spark):
-    """The r12 statistic gate: a flat-UB corpus (every term's df equal,
-    so every UB equal) must read as non-prunable — q178 degrades to
-    q175's direct plan — while a Zipfian corpus with rare terms must
-    read as prunable (the seed/θ/essential machinery engages).
+    """The r12 statistic (the plan gate's spread step): a flat-UB
+    corpus (every term's df equal, so every UB equal) must route
+    'flat' — q178 degrades to q175's direct plan — while a Zipfian
+    corpus with rare terms must route past 'flat' (the
+    seed/θ/essential machinery engages).
     Routing is a function of SAMPLED per-query df proportions — a rare
     term (p <= MS_RARE_P, sample-absent counts as 0) AND a common term
     (p >= MS_COMMON_P) must coexist, which implies the 2x UB spread
@@ -187,14 +188,14 @@ def test_maxscore_spread_gate_routing(spark):
     common = "the of and to in for a is on at"
     flat = spark.createDataFrame(
         [(i, common) for i in range(1000)], "doc_id long, text string")
-    assert not R.maxscore_gate_is_prunable(flat)
+    assert R.maxscore_gate_plan(flat) == "flat"
     rows = [(i, f"{common} rare{i % 25}a rare{i % 25}b {common}")
             for i in range(1000)]
     zipf = spark.createDataFrame(rows, "doc_id long, text string")
-    assert R.maxscore_gate_is_prunable(zipf)
+    assert R.maxscore_gate_plan(zipf) == "block"
     # the shipped sf0.1 fixture is the flat case the r11 verdict measured
-    assert not R.maxscore_gate_is_prunable(
-        load_table(spark, "/root/testdata/sf0.1", "documents"))
+    assert R.maxscore_gate_plan(
+        load_table(spark, "/root/testdata/sf0.1", "documents")) == "flat"
     # degenerate corpora: empty routes to the (vacuous) degrade branch;
     # corpora under MS_SAMPLE_TARGET docs sample FULLY (mod = 1, the
     # r12 ADVICE fix), so the 2-doc statistic is EXACT: every query
@@ -203,10 +204,10 @@ def test_maxscore_spread_gate_routing(spark):
     # absent-rare; either branch is exact, but the exact statistic is
     # the right routing.)
     empty = spark.createDataFrame([], "doc_id long, text string")
-    assert not R.maxscore_gate_is_prunable(empty)
+    assert R.maxscore_gate_plan(empty) == "flat"
     tiny = spark.createDataFrame([(0, "a b c"), (1, "a b d")],
                                  "doc_id long, text string")
-    assert not R.maxscore_gate_is_prunable(tiny)
+    assert R.maxscore_gate_plan(tiny) == "flat"
     # absent-counts-as-rare still fires when the corpus is big enough
     # to sample (mod = 2 at 2·MS_SAMPLE_TARGET docs): a marker term
     # living only on ODD doc_ids never enters the even-doc sample, so
@@ -215,16 +216,19 @@ def test_maxscore_spread_gate_routing(spark):
     rows = [(i, common + (" zzzmarker" if i % 2 == 1 else ""))
             for i in range(n)]
     oddmark = spark.createDataFrame(rows, "doc_id long, text string")
-    assert R.maxscore_gate_is_prunable(oddmark)
+    assert R.maxscore_gate_plan(oddmark) == "block"
 
 
-def test_gate_memo_skips_repeat_probes(spark):
-    """r17 (VERDICT r16 Next-round #1): the plan-gate verdict is a
+def test_gate_memo_skips_repeat_probes(spark, monkeypatch):
+    """r17 (VERDICT r16 Next-round #1): the plan-gate route is a
     corpus property — a repeat gate call over the same parquet files
     must hit the memo and run ZERO Spark jobs; memo.bypass("retrieval")
     recomputes (the true-cost bench convention); in-memory fixtures
-    are never memoized (no file fingerprint); and a fresh recompute
-    with the memo cleared returns the identical verdict."""
+    are never memoized (no file fingerprint); a fresh recompute with
+    the memo cleared returns the identical route; and the four gated
+    queries share ONE probe per corpus: once q178 has built, the gate
+    calls of q183, q189 and q194 run no Spark job and the memo holds a
+    single gate key for the corpus."""
     import oanda_stream_processor_spark.operators.retrieval as R
     from oanda_stream_processor_spark.io import load_table
 
@@ -235,38 +239,93 @@ def test_gate_memo_skips_repeat_probes(spark):
     R._RETRIEVAL.clear()
     sc.setJobGroup("gate_memo", "gate memo probe sweep")
     try:
-        first = R.maxscore_gate_is_prunable(d)
-        plan_first = R.maxscore_gate_plan(d)
+        first = R.maxscore_gate_plan(d)
         before = len(tracker.getJobIdsForGroup("gate_memo"))
-        assert R.maxscore_gate_is_prunable(d) is first
-        assert R.maxscore_gate_plan(d) == plan_first
+        assert R.maxscore_gate_plan(d) == first
         after = len(tracker.getJobIdsForGroup("gate_memo"))
         assert after == before, "memoized gate ran Spark jobs"
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    # coherence: plan != 'flat' iff the binary gate fired, memo or not
-    assert (plan_first != "flat") == first
+    assert first == "term"
     # memo-off bypass recomputes and agrees
     with memo.bypass("retrieval"):
-        assert R._gate_memo_key("prunable", d) is None
-        assert R.maxscore_gate_is_prunable(d) is first
+        assert R._gate_memo_key("plan", d) is None
+        assert R.maxscore_gate_plan(d) == first
     # in-memory fixtures carry no input files -> never memoized
     fx = spark.createDataFrame([(0, "a b"), (1, "a c")],
                                "doc_id long, text string")
     n0 = len(R._RETRIEVAL.keys())
-    R.maxscore_gate_is_prunable(fx)
+    R.maxscore_gate_plan(fx)
     assert len(R._RETRIEVAL.keys()) == n0
-    # cleared memo recomputes to the identical verdict
+    # cleared memo recomputes to the identical route
     R._RETRIEVAL.clear()
-    assert R.maxscore_gate_is_prunable(d) is first
-    assert R.maxscore_gate_plan(d) == plan_first
+    assert R.maxscore_gate_plan(d) == first
+
+    # one probe per corpus across the family: q178 warms the gate, the
+    # other three queries' gate calls are memo hits (no Spark job)
+    R._RETRIEVAL.clear()
+    R.q178_bm25_maxscore_topk(spark, sf)
+    gate, jobs = R.maxscore_gate_plan, []
+
+    def counted(frame):
+        sc.setJobGroup("gate_share", "gate calls after q178")
+        n = len(tracker.getJobIdsForGroup("gate_share"))
+        try:
+            return gate(frame)
+        finally:
+            jobs.append(len(tracker.getJobIdsForGroup("gate_share")) - n)
+            sc.setJobGroup("gate_rest", "query construction")
+
+    monkeypatch.setattr(R, "maxscore_gate_plan", counted)
+    try:
+        for q in (R.q183_bm25f_maxscore_topk, R.q189_bm25_blockmax_topk,
+                  R.q194_bm25f_blockmax_topk):
+            q(spark, sf)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) >= 3 and set(jobs) == {0}, jobs
+    files = (tuple(sorted(d.inputFiles())),)
+    assert [k[0] for k in R._RETRIEVAL.keys() if k[1] == files] == ["plan"]
+
+
+def test_gate_logs_route_and_source(spark, caplog):
+    """Every plan-gate call logs one JSON line through the C3 logger's
+    retrieval child: the route and where it came from — an in-memory
+    fixture always probes; a fixture-backed corpus probes once, then
+    reads the memo."""
+    import json
+    import logging
+
+    import oanda_stream_processor_spark.operators.retrieval as R
+    from oanda_stream_processor_spark.io import load_table
+
+    def events():
+        out = [json.loads(r.getMessage()) for r in caplog.records
+               if r.name == "oanda_stream_processor_spark.retrieval"]
+        caplog.clear()
+        return out
+
+    caplog.set_level(logging.INFO,
+                     logger="oanda_stream_processor_spark.retrieval")
+    R._RETRIEVAL.clear()
+    fx = spark.createDataFrame([(0, "a b"), (1, "a c")],
+                               "doc_id long, text string")
+    R.maxscore_gate_plan(fx)
+    assert events() == [{"event": "plan_gate", "kind": "plan",
+                         "plan": "flat", "source": "probe"}]
+    d = load_table(spark, "/root/testdata/sf0.001", "documents")
+    R.maxscore_gate_plan(d)
+    R.maxscore_gate_plan(d)
+    assert [(e["source"], e["plan"]) for e in events()] == \
+        [("probe", "term"), ("memo", "term")]
 
 
 def test_gate_memo_store_fingerprint_tracks_appends(spark, tmp_path):
-    """The from_postings gates memoize per store FILE SET: an append
+    """The stored-postings gate memoizes per store FILE SET: an append
     (a new batch_id partition) changes the fingerprint, so the probe
-    re-runs over the grown corpus instead of serving a stale verdict."""
+    re-runs over the grown corpus instead of serving a stale route."""
     import oanda_stream_processor_spark.operators.retrieval as R
     from oanda_stream_processor_spark.streaming.bm25gate import (
         read_dl,
@@ -281,25 +340,25 @@ def test_gate_memo_store_fingerprint_tracks_appends(spark, tmp_path):
     state = str(tmp_path / "bm25")
     R._RETRIEVAL.clear()
     write_batch_partials(d.where(F.col("doc_id") % 2 == 0), state, 0)
-    v0 = R.maxscore_gate_from_postings(read_tf(spark, state),
-                                       read_dl(spark, state))
+    v0 = R.maxscore_gate_plan_from_postings(read_tf(spark, state),
+                                            read_dl(spark, state))
     keys0 = R._RETRIEVAL.keys()
     write_batch_partials(d.where(F.col("doc_id") % 2 == 1), state, 1)
-    v1 = R.maxscore_gate_from_postings(read_tf(spark, state),
-                                       read_dl(spark, state))
+    v1 = R.maxscore_gate_plan_from_postings(read_tf(spark, state),
+                                            read_dl(spark, state))
     keys1 = R._RETRIEVAL.keys()
     assert keys0 < keys1, "append did not change the memo fingerprint"
-    # both verdicts match the text gate on the same ingested docs
-    assert v1 == R.maxscore_gate_is_prunable(d)
-    assert isinstance(v0, bool)
+    # the full store routes like the text gate on the same docs
+    assert v0 == v1 == R.maxscore_gate_plan(d) == "block"
 
 
 def test_gate_memo_persists_next_to_store(spark, tmp_path,
-                                           monkeypatch):
+                                           monkeypatch, caplog):
     """r18 (VERDICT r17 Next-round #5): the store-backed gate verdict
     survives a process restart via the .gate_memo.json sidecar under
     the store root — a fresh process (simulated: cleared in-memory
-    memo) serves the verdict with ZERO probe work; the sidecar is
+    memo) serves the verdict with ZERO probe work, and logs it as a
+    sidecar read; the sidecar is
     invalidated by the same input-file fingerprint as the memo (an
     append re-probes); memo-off never reads nor writes it; and the
     TEXT gates never write a sidecar into the read-only fixtures."""
@@ -323,8 +382,6 @@ def test_gate_memo_persists_next_to_store(spark, tmp_path,
         write_batch_partials(d.where(F.col("doc_id") % 2 == i),
                              state, i)
     R._RETRIEVAL.clear()
-    v_pr = R.maxscore_gate_from_postings(read_tf(spark, state),
-                                         read_dl(spark, state))
     v_pl = R.maxscore_gate_plan_from_postings(read_tf(spark, state),
                                               read_dl(spark, state))
     side = os.path.join(state, ".gate_memo.json")
@@ -338,10 +395,12 @@ def test_gate_memo_persists_next_to_store(spark, tmp_path,
     R._RETRIEVAL.clear()
     monkeypatch.setattr(DataFrame, "count", _boom)
     monkeypatch.setattr(DataFrame, "mapInPandas", _boom)
-    assert R.maxscore_gate_from_postings(
-        read_tf(spark, state), read_dl(spark, state)) == v_pr
+    caplog.set_level("INFO", logger="oanda_stream_processor_spark.retrieval")
     assert R.maxscore_gate_plan_from_postings(
         read_tf(spark, state), read_dl(spark, state)) == v_pl
+    logged = [r.getMessage() for r in caplog.records
+              if r.name == "oanda_stream_processor_spark.retrieval"]
+    assert '"source": "sidecar"' in logged[-1]
     monkeypatch.undo()
 
     # an append changes the fingerprint: the stale sidecar must MISS
@@ -369,7 +428,7 @@ def test_gate_memo_persists_next_to_store(spark, tmp_path,
     from oanda_stream_processor_spark.io import load_table
     sf = "/root/testdata/sf0.001"
     R._RETRIEVAL.clear()
-    R.maxscore_gate_is_prunable(load_table(spark, sf, "documents"))
+    R.maxscore_gate_plan(load_table(spark, sf, "documents"))
     assert not os.path.exists(os.path.join(sf, ".gate_memo.json"))
 
 
@@ -581,14 +640,12 @@ def test_blockmax_prunes_blocks_and_stays_exact(spark):
 
 
 def test_blockmax_gate_three_way_routing(spark):
-    """The extended plan gate: flat corpus -> 'flat' (no UB spread);
+    """The plan gate: flat corpus -> 'flat' (no UB spread);
     spread corpus with SATURATED postings (every tf = 5, sampled
     headroom 1 − 5/(5 + k1) ≈ 0.19 < BM_HEADROOM) -> 'term' (block
     bounds collapse onto the whole-term bound); spread corpus with
-    tf = 1 postings -> 'block'.  The prunable half must agree with
-    the binary q178 gate on every corpus (same _spread_decision over
-    the same sample), and every route returns exact rows — routing
-    is cost-only, conservative-side-only."""
+    tf = 1 postings -> 'block'.  Every route returns exact rows —
+    routing is cost-only, conservative-side-only."""
     common = "the of and to in for a is on at"
     flat = spark.createDataFrame(
         [(i, common) for i in range(400)], "doc_id long, text string")
@@ -606,7 +663,6 @@ def test_blockmax_gate_three_way_routing(spark):
                           ("blockish", blockish, "block")):
         plan = R.maxscore_gate_plan(d)
         assert plan == want, (name, plan)
-        assert (plan != "flat") == R.maxscore_gate_is_prunable(d), name
 
 
 def test_phrase_filtered_bm25_invariants(spark):

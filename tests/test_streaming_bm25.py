@@ -255,15 +255,15 @@ def test_bm25f_served_tracks_appends_and_stream(spark, tmp_path):
 
 
 def test_served_maxscore_gate_and_prune(spark, tmp_path):
-    """r12 verdict ask #6: serve_bm25_topk routes through the q178
-    MaxScore gate.  On both a FLAT and a Zipfian STORED corpus the
-    pruned read equals the unpruned read row-for-row (exactness is
+    """r12 verdict ask #6: serve_bm25_topk routes through the MaxScore
+    plan gate.  On both a FLAT and a Zipfian STORED corpus the pruned
+    read equals the flat read row-for-row (exactness is
     plan-independent), the stored-postings gate routes each corpus
     exactly like the one-shot text gate, and the default gated read
-    equals both forced branches."""
+    equals the forced routes."""
     from oanda_stream_processor_spark.operators.retrieval import (
-        maxscore_gate_from_postings,
-        maxscore_gate_is_prunable,
+        maxscore_gate_plan,
+        maxscore_gate_plan_from_postings,
     )
     from oanda_stream_processor_spark.streaming.bm25gate import (
         read_dl,
@@ -276,15 +276,15 @@ def test_served_maxscore_gate_and_prune(spark, tmp_path):
     zipf = spark.createDataFrame(
         [(i, f"{common} rare{i % 25}a rare{i % 25}b")
          for i in range(400)], "doc_id long, text string")
-    for name, d, want in (("flat", flat, False), ("zipf", zipf, True)):
+    for name, d, want in (("flat", flat, "flat"), ("zipf", zipf, "block")):
         state = str(tmp_path / name)
         write_batch_partials(d.where(F.col("doc_id") % 2 == 0), state, 0)
         write_batch_partials(d.where(F.col("doc_id") % 2 == 1), state, 1)
-        assert maxscore_gate_from_postings(
-            read_tf(spark, state), read_dl(spark, state)) is want, name
-        assert maxscore_gate_is_prunable(d) is want, name  # same routing
-        pruned = _table(serve_bm25_topk(spark, state, prune=True))
-        unpruned = _table(serve_bm25_topk(spark, state, prune=False))
+        assert maxscore_gate_plan_from_postings(
+            read_tf(spark, state), read_dl(spark, state)) == want, name
+        assert maxscore_gate_plan(d) == want, name  # same routing
+        pruned = _table(serve_bm25_topk(spark, state, plan="term"))
+        unpruned = _table(serve_bm25_topk(spark, state, plan="flat"))
         assert pruned == unpruned, name
         assert _table(serve_bm25_topk(spark, state)) == unpruned, name
 
@@ -293,7 +293,7 @@ def test_served_maxscore_gate_and_prune(spark, tmp_path):
     # postings gate can only count docs carrying >= 1 token, so with
     # empty-text docs the two sides may pick different MODs, sample
     # different doc sets, and ROUTE differently — the ACCEPTED
-    # divergence (_spread_decision itself excludes empties from the
+    # divergence (_plan_decision itself excludes empties from the
     # statistic on both sides, so only the MOD-induced sample shift
     # can split them).  What must hold regardless of routing — and
     # what this pins — is that BOTH branches stay exact.  4800 docs
@@ -307,12 +307,12 @@ def test_served_maxscore_gate_and_prune(spark, tmp_path):
     state = str(tmp_path / "mixed")
     write_batch_partials(mixed.where(F.col("doc_id") % 2 == 0), state, 0)
     write_batch_partials(mixed.where(F.col("doc_id") % 2 == 1), state, 1)
-    g_store = maxscore_gate_from_postings(
+    g_store = maxscore_gate_plan_from_postings(
         read_tf(spark, state), read_dl(spark, state))
-    g_text = maxscore_gate_is_prunable(mixed)
-    assert isinstance(g_store, bool) and isinstance(g_text, bool)
-    pruned = _table(serve_bm25_topk(spark, state, prune=True))
-    unpruned = _table(serve_bm25_topk(spark, state, prune=False))
+    g_text = maxscore_gate_plan(mixed)
+    assert g_store == g_text == "block"
+    pruned = _table(serve_bm25_topk(spark, state, plan="term"))
+    unpruned = _table(serve_bm25_topk(spark, state, plan="flat"))
     assert pruned == unpruned, "empty-doc corpus: branches diverged"
 
 
@@ -338,7 +338,6 @@ def test_block_store_merges_and_serves_blockmax(spark, tmp_path):
         read_block_stats,
         read_dl,
         read_tf,
-        serve_bm25_blockmax_topk,
     )
 
     d = _block_skewed(spark)
@@ -353,10 +352,9 @@ def test_block_store_merges_and_serves_blockmax(spark, tmp_path):
         assert _table(read_block_stats(spark, state)) == \
             _table(block_stats_from(tf, dl)), f"blk merge, batch {i}"
         # served block-max == served unpruned == one-shot, every prefix
-        blk_served = _table(serve_bm25_blockmax_topk(spark, state,
-                                                     plan="block"))
+        blk_served = _table(serve_bm25_topk(spark, state, plan="block"))
         assert blk_served == _table(serve_bm25_topk(spark, state,
-                                                    prune=False)), \
+                                                    plan="flat")), \
             f"served blockmax diverged after batch {i}"
         assert blk_served == _table(
             _one_shot_pool_on(spark, seen).where(F.col("rank") <= 10)
@@ -373,11 +371,11 @@ def test_block_store_merges_and_serves_blockmax(spark, tmp_path):
     plan = maxscore_gate_plan_from_postings(read_tf(spark, state),
                                             read_dl(spark, state))
     assert plan == maxscore_gate_plan(d) == "block"
-    want = _table(serve_bm25_blockmax_topk(spark, state, plan="block"))
-    assert _table(serve_bm25_blockmax_topk(spark, state)) == want
-    assert _table(serve_bm25_blockmax_topk(spark, state,
+    want = _table(serve_bm25_topk(spark, state, plan="block"))
+    assert _table(serve_bm25_topk(spark, state)) == want
+    assert _table(serve_bm25_topk(spark, state,
                                            plan="term")) == want
-    assert _table(serve_bm25_blockmax_topk(spark, state,
+    assert _table(serve_bm25_topk(spark, state,
                                            plan="flat")) == want
 
 
@@ -393,7 +391,6 @@ def test_served_blockmax_on_fixture_routes_and_matches(spark, tmp_path):
     from oanda_stream_processor_spark.streaming.bm25gate import (
         read_dl,
         read_tf,
-        serve_bm25_blockmax_topk,
     )
 
     d = load_table(spark, SF_DIR, "documents")
@@ -403,7 +400,7 @@ def test_served_blockmax_on_fixture_routes_and_matches(spark, tmp_path):
     assert maxscore_gate_plan_from_postings(
         read_tf(spark, state), read_dl(spark, state)) == \
         maxscore_gate_plan(d)
-    assert _table(serve_bm25_blockmax_topk(spark, state)) == \
+    assert _table(serve_bm25_topk(spark, state)) == \
         _table(q175_bm25_topk(spark, SF_DIR))
 
 
@@ -489,19 +486,18 @@ def test_block_and_prf_reads_survive_store_without_blk(spark, tmp_path):
     import shutil
 
     from oanda_stream_processor_spark.streaming.bm25gate import (
-        serve_bm25_blockmax_topk,
         serve_prf_expanded_bm25,
     )
 
     d = load_table(spark, SF_DIR, "documents")
     state = str(tmp_path / "state")
     write_batch_partials(d, state, 0)
-    want_blk = _table(serve_bm25_blockmax_topk(spark, state,
+    want_blk = _table(serve_bm25_topk(spark, state,
                                                plan="block"))
     want_prf = _table(serve_prf_expanded_bm25(spark, state,
                                               plan="block"))
     shutil.rmtree(f"{state}/blk")
-    assert _table(serve_bm25_blockmax_topk(spark, state,
+    assert _table(serve_bm25_topk(spark, state,
                                            plan="block")) == want_blk
     assert _table(serve_prf_expanded_bm25(spark, state,
                                           plan="block")) == want_prf

@@ -58,7 +58,7 @@ def test_bm25_store_compaction_preserves_reads(spark, tmp_path):
         write_batch_partials(d.where(F.col("doc_id") % 4 == i),
                              state, i)
     want_pool = _table(serve_bm25_pool(spark, state))
-    want_tk = _table(serve_bm25_topk(spark, state, prune=True,
+    want_tk = _table(serve_bm25_topk(spark, state, plan="term",
                                      theta="seed"))
     files_before = store_file_count(state)
     out = compact_bm25_store(spark, state)
@@ -66,21 +66,21 @@ def test_bm25_store_compaction_preserves_reads(spark, tmp_path):
     assert set(batch_ids(os.path.join(state, "tf"))) == {0, 3}
     assert store_file_count(state) < files_before
     assert _table(serve_bm25_pool(spark, state)) == want_pool
-    assert _table(serve_bm25_topk(spark, state, prune=True,
+    assert _table(serve_bm25_topk(spark, state, plan="term",
                                   theta="seed")) == want_tk
-    assert _table(serve_bm25_topk(spark, state, prune=True,
+    assert _table(serve_bm25_topk(spark, state, plan="term",
                                   theta="hist")) == want_tk
     # append after compaction, then compact again (fold {0, 3} -> 0)
     extra = spark.createDataFrame(
         [(i, "the of and rare0a rare0b") for i in range(400, 500)],
         "doc_id long, text string")
     write_batch_partials(extra, state, 4)
-    want2 = _table(serve_bm25_topk(spark, state, prune=True,
+    want2 = _table(serve_bm25_topk(spark, state, plan="term",
                                    theta="seed"))
     out = compact_bm25_store(spark, state)
     assert out["folded"] == [0, 3]
     assert set(batch_ids(os.path.join(state, "tf"))) == {0, 4}
-    assert _table(serve_bm25_topk(spark, state, prune=True,
+    assert _table(serve_bm25_topk(spark, state, plan="term",
                                   theta="hist")) == want2
     # a single remaining foldable id is a no-op (never fold the max)
     assert compact_bm25_store(spark, state)["folded"] == [0]
@@ -191,7 +191,7 @@ def test_theta_store_guard_survives_compaction(spark, tmp_path):
         write_batch_partials(part, b, i)
         (batch_impact_partial(part).write.mode("overwrite")
          .parquet(f"{th}/batch_id={i}"))
-    want = _table(serve_bm25_topk(spark, b, prune=True, theta="seed"))
+    want = _table(serve_bm25_topk(spark, b, plan="term", theta="seed"))
     assert hist_not_ahead(spark, b, th)
     assert compact_theta_store(spark, th)["folded"] == [0, 1]
     # theta folded {0,1}->0 but tf still has {0,1,2}: 0 ⊄... the set
@@ -199,18 +199,18 @@ def test_theta_store_guard_survives_compaction(spark, tmp_path):
     # fold the POSTINGS side one step further to force a theta id the
     # postings store lacks
     assert _table(serve_bm25_topk_hist_theta(spark, b, th,
-                                             prune=True)) == want
+                                             plan="term")) == want
     compact_bm25_store(spark, b)          # tf ids {0, 2}
     (batch_impact_partial(d.where(F.col("doc_id") % 3 == 2))
      .write.mode("overwrite").parquet(f"{th}/batch_id=3"))
     # theta ids {0, 2, 3} vs tf {0, 2}: histogram ran ahead -> guard
     assert not hist_not_ahead(spark, b, th)
     assert _table(serve_bm25_topk_hist_theta(spark, b, th,
-                                             prune=True)) == want
+                                             plan="term")) == want
     shutil.rmtree(f"{th}/batch_id=3")
     assert hist_not_ahead(spark, b, th)
     assert _table(serve_bm25_topk_hist_theta(spark, b, th,
-                                             prune=True)) == want
+                                             plan="term")) == want
 
 
 def test_compaction_recovery_heals_interrupted_swap(spark, tmp_path):

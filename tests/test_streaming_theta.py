@@ -115,9 +115,9 @@ def test_served_hist_theta_read_is_exact_per_prefix(spark, tmp_path):
              .parquet(f"{theta_state}/batch_id={i}"))
             seen = part if seen is None else seen.unionByName(part)
             pruned = _table(serve_bm25_topk_hist_theta(
-                spark, bm25_state, theta_state, prune=True))
+                spark, bm25_state, theta_state, plan="term"))
             unpruned = _table(serve_bm25_topk_hist_theta(
-                spark, bm25_state, theta_state, prune=False))
+                spark, bm25_state, theta_state, plan="flat"))
             assert pruned == unpruned, (name, i)
         assert _table(serve_bm25_topk_hist_theta(
             spark, bm25_state, theta_state)) == pruned, name
@@ -169,7 +169,6 @@ def test_lockstep_impact_layout_and_default_fold(spark, tmp_path):
     import pytest
 
     from oanda_stream_processor_spark.streaming.bm25gate import (
-        serve_bm25_blockmax_topk,
         serve_bm25_topk,
     )
 
@@ -179,29 +178,21 @@ def test_lockstep_impact_layout_and_default_fold(spark, tmp_path):
     for i in range(2):
         part = d.where(F.col("doc_id") % 2 == i)
         write_batch_partials(part, state, i)
-        want = _table(serve_bm25_topk(spark, state, prune=True,
-                                      theta="seed"))
-        assert _table(serve_bm25_topk(spark, state, prune=True,
-                                      theta="hist")) == want
-        assert _table(serve_bm25_topk(spark, state,
-                                      prune=False)) == want
+        want = _table(serve_bm25_topk(spark, state, plan="flat"))
         assert _table(serve_bm25_topk_hist_theta(spark, state,
-                                                 prune=True)) == want
-        # the fold extended to the served block-max read (r15):
+                                                 plan="term")) == want
         # hist θ ≡ seed θ on both pruned plans, blocked skip included
         for plan in ("term", "block"):
-            assert _table(serve_bm25_blockmax_topk(
-                spark, state, plan=plan, theta="hist")) == want, \
-                (plan, i)
-            assert _table(serve_bm25_blockmax_topk(
-                spark, state, plan=plan, theta="seed")) == want, \
-                (plan, i)
+            for theta in ("hist", "seed"):
+                assert _table(serve_bm25_topk(
+                    spark, state, plan=plan, theta=theta)) == want, \
+                    (plan, theta, i)
     # pre-r15 store shape: no impact/ layout -> 'auto' falls back to
     # the seed pass; 'hist' refuses loudly
     shutil.rmtree(f"{state}/impact")
-    assert _table(serve_bm25_topk(spark, state, prune=True)) == want
+    assert _table(serve_bm25_topk(spark, state, plan="term")) == want
     with pytest.raises(ValueError, match="impact"):
-        serve_bm25_topk(spark, state, prune=True, theta="hist")
+        serve_bm25_topk(spark, state, plan="term", theta="hist")
 
 
 def test_theta_hist_on_flat_route_refuses_loudly(spark, tmp_path):
@@ -213,7 +204,6 @@ def test_theta_hist_on_flat_route_refuses_loudly(spark, tmp_path):
     import pytest
 
     from oanda_stream_processor_spark.streaming.bm25gate import (
-        serve_bm25_blockmax_topk,
         serve_bm25_topk,
         serve_bm25f_blockmax_topk,
         serve_bm25f_topk,
@@ -225,16 +215,11 @@ def test_theta_hist_on_flat_route_refuses_loudly(spark, tmp_path):
     fstate = str(tmp_path / "field")
     write_batch_partials(d, b, 0)
     write_batch_field_partials(d, fstate, 0)
-    want = _table(serve_bm25_topk(spark, b, prune=False))
-    for call in (lambda t: serve_bm25_topk(spark, b, prune=False,
-                                           theta=t),
-                 lambda t: serve_bm25_blockmax_topk(spark, b,
-                                                    plan="flat",
-                                                    theta=t)):
-        assert _table(call("auto")) == want
-        assert _table(call("seed")) == want
-        with pytest.raises(ValueError, match="flat"):
-            call("hist")
+    want = _table(serve_bm25_topk(spark, b, plan="flat"))
+    assert _table(serve_bm25_topk(spark, b, plan="flat",
+                                  theta="seed")) == want
+    with pytest.raises(ValueError, match="flat"):
+        serve_bm25_topk(spark, b, plan="flat", theta="hist")
     wantf = _table(serve_bm25f_topk(spark, fstate))
     assert _table(serve_bm25f_blockmax_topk(
         spark, fstate, plan="flat", theta="auto")) == wantf
@@ -333,7 +318,7 @@ def test_external_hist_ahead_guard_falls_back_exact(spark, tmp_path):
          .parquet(f"{theta_state}/batch_id={i}"))
     assert not hist_not_ahead(spark, bm25_state, theta_state)
     got = _table(serve_bm25_topk_hist_theta(spark, bm25_state,
-                                            theta_state, prune=True))
+                                            theta_state, plan="term"))
     tf, dfq, dl, stats = corpus_term_frames(b0)
     pool = bm25_pool_from(tf, dfq, dl, stats, query_terms_from(tf))
     want = _table(pool.where(F.col("rank") <= TOP_K)

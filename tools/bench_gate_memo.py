@@ -2,9 +2,10 @@
 q178/q183/q189/q194 pay a bounded ~2k-doc plan-gate probe at every
 query CONSTRUCTION — harmless once, but a serving process that
 rebuilds queries per request re-pays a probe whose answer is a
-property of the corpus, not the query.  The retrieval memo entry now
-memoizes the verdict per (gate kind, corpus input-file fingerprint),
-so only the first construction probes.
+property of the corpus, not the query.  The retrieval memo entry
+memoizes the route per (gate kind, corpus input-file fingerprint), so
+only the first construction probes — and all four queries read the
+one plan gate, so over one corpus they share that probe.
 
 This tool times, at the given sf_dir (the sf0.1 fixture routes
 'flat', so q194 == gate probe + q177's plan verbatim):
@@ -16,8 +17,9 @@ This tool times, at the given sf_dir (the sf0.1 fixture routes
 * q194 memo-off — memo.bypass("retrieval") (the true-cost bench
   convention: the probe IS part of the query's first-request cost
   and the official bench keeps measuring it), min-of-runs;
-* q178 repeat/memo-off — the binary-gate family, same shape (its
-  delegate is q175).
+* q178 first/repeat/memo-off — the same gate from the term-only
+  query, same shape (its delegate is q175); the memo is cleared
+  before q178's first build so it pays its own probe.
 
 Rows are asserted identical memo-on vs memo-off before timing (the
 memo changes WHEN the probe runs, never the verdict).  Prints one
@@ -76,6 +78,8 @@ def main() -> None:
            "runs": RUNS,
            "plan": R.maxscore_gate_plan(
                R.load_table(spark, SF_DIR, "documents"))}
+    assert len([k for k in R._RETRIEVAL.keys() if k[0] == "plan"]) == 1, \
+        "q178 and q194 did not share one gate probe"
 
     out["q177_delegate_s"] = best_of(R.q177_bm25f_topk)
     R._RETRIEVAL.clear()

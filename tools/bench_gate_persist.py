@@ -3,10 +3,9 @@ how much of the plan-gate probe a RESTARTED serving process skips when
 the verdict is persisted under the store root.
 
 Builds an N-batch BM25 store from the sf documents table, then times
-``maxscore_gate_plan_from_postings`` + ``maxscore_gate_from_postings``
-(the two store-backed gate probes a serving process pays per corpus)
-under three protocols, min-of-RUNS each, clearing the in-memory memo
-before every run (= fresh process):
+``maxscore_gate_plan_from_postings`` (the store-backed gate probe a
+serving process pays per corpus) under three protocols, min-of-RUNS
+each, clearing the in-memory memo before every run (= fresh process):
 
 * probe    — sidecar removed each run: the full bounded probe
   (pre-r18 restart cost);
@@ -14,7 +13,7 @@ before every run (= fresh process):
 * memo-off — memo.bypass("retrieval"): the bench's timed-region
   protocol, asserted to keep probing (and never write the sidecar).
 
-Verdicts asserted identical across all three.  Prints one JSON line.
+Routes asserted identical across all three.  Prints one JSON line.
 
 Usage: python tools/bench_gate_persist.py [sf_dir] [n_batches] [runs]
 """
@@ -61,20 +60,16 @@ def main() -> None:
         write_batch_partials(part, ROOT, i)
     side = os.path.join(ROOT, R._GATE_SIDECAR)
 
-    def gates():
-        tf, dl = read_tf(spark, ROOT), read_dl(spark, ROOT)
-        return (R.maxscore_gate_plan_from_postings(tf, dl),
-                R.maxscore_gate_from_postings(tf, dl))
-
-    def best(prep) -> tuple[float, tuple]:
-        out, verdicts = float("inf"), None
+    def best(prep) -> tuple[float, str]:
+        out, plan = float("inf"), None
         for _ in range(RUNS):
             R._RETRIEVAL.clear()          # = restarted process
             prep()
             t0 = time.perf_counter()
-            verdicts = gates()
+            plan = R.maxscore_gate_plan_from_postings(
+                read_tf(spark, ROOT), read_dl(spark, ROOT))
             out = min(out, time.perf_counter() - t0)
-        return round(out, 3), verdicts
+        return round(out, 3), plan
 
     def rm_side():
         if os.path.isfile(side):
@@ -89,14 +84,14 @@ def main() -> None:
         memooff_s, v_off = best(lambda: None)
     assert not os.path.isfile(side), "memo-off wrote the sidecar"
 
-    assert v_probe == v_side == v_off, "verdict diverged across paths"
+    assert v_probe == v_side == v_off, "route diverged across paths"
     out = {
         "metric": "gate_verdict_persistence",
         "sf_dir": SF_DIR, "n_batches": nb, "runs": RUNS,
         "restart_probe_s": probe_s,
         "restart_sidecar_s": sidecar_s,
         "memo_off_probe_s": memooff_s,
-        "verdicts": list(v_probe),
+        "plan": v_probe,
         "note": ("min-of-RUNS, in-memory memo cleared before every "
                  "run (= fresh process); 'probe' removes the sidecar "
                  "each run, 'sidecar' reads it, memo-off bypasses "

@@ -12,9 +12,9 @@ between:
   histogram (bounded arithmetic over the merged sketch), no candidate
   scoring before the single exact scoring pass.
 
-Both branches are forced PRUNED (prune=True) so the measurement
-isolates the θ-derivation difference — on a flat-routed corpus the
-gate would take neither.  Rows are asserted identical before timing
+Both branches are forced onto the pruned term route (plan='term') so
+the measurement isolates the θ-derivation difference — on a
+flat-routed corpus the gate would take neither.  Rows are asserted identical before timing
 (the exactness contract).  Prints one JSON line.
 
 Usage: python tools/bench_served_theta.py [sf_dir] [runs]
@@ -57,15 +57,15 @@ def main() -> None:
         best = float("inf")
         for _ in range(RUNS):
             t = time.perf_counter()
-            (serve_bm25_topk(spark, STORE, prune=True, theta=theta)
+            (serve_bm25_topk(spark, STORE, plan="term", theta=theta)
              .write.format("noop").mode("overwrite").save())
             best = min(best, time.perf_counter() - t)
         return round(best, 3)
 
     same = (sorted(map(tuple, serve_bm25_topk(
-                spark, STORE, prune=True, theta="hist").collect()))
+                spark, STORE, plan="term", theta="hist").collect()))
             == sorted(map(tuple, serve_bm25_topk(
-                spark, STORE, prune=True, theta="seed").collect())))
+                spark, STORE, plan="term", theta="seed").collect())))
     assert same, "hist and seed reads diverged — fold is broken"
     seed_s, hist_s = run("seed"), run("hist")
     print(json.dumps({
