@@ -16,8 +16,9 @@ for the message shapes declared in the reference wire schema
 
 proto3 semantics honored: default values (empty string, 0) are omitted;
 oneof encodes exactly one branch. Tags are constant bytes and values
-under 128 come from a table; the batch kernel (streaming/encode.py)
-calls the per-message functions below once per row.
+under 128 come from a table. The functions below encode one message per
+call: they are the reference the columnar batch kernel
+(streaming/encode.py) is tested against, and perfbench's API.
 
 If google.protobuf becomes available, these bytes parse with the
 generated classes for the same .proto — the contract, not this encoder,
@@ -97,8 +98,8 @@ def encode_heartbeat(ts_seconds, ts_nanos, hb_type: str | None) -> bytes:
 
 def encode_stream_message(message_type: str, payload: bytes) -> bytes:
     """oneof envelope: price_tick=1, heartbeat=2 — the wire schema is
-    closed; anything else (Unknown) is refused here, and the batch
-    kernel drops it before calling (main.rs:117-119)."""
+    closed; anything else (Unknown) is refused here, as the batch kernel
+    drops it (main.rs:117-119)."""
     tag = _ENVELOPE.get(message_type)
     if tag is None:
         raise ValueError(f"unpublishable message_type: {message_type!r}")

@@ -94,19 +94,22 @@ class PartitionedFilePublisherFactory:
 def _publish_all(batches, publisher) -> int:
     n = 0
     for batch in batches:
-        for payload in encode_batch(batch)[1]:
+        payloads = encode_batch(batch).column("payload").to_pylist()
+        for payload in payloads:
             publisher.publish(payload)
-            n += 1
+        n += len(payloads)
     return n
 
 
 def publish_batch(batch_df: DataFrame, publisher) -> int:
     """The single-socket edge (one PUB socket, publisher.rs:10-25): every
     payload funnels through the driver, so it encodes there too, after
-    one Arrow collect (one job, no Python worker), and publishes in row
-    order. The driver holds one micro-batch, which ``maxFilesPerTrigger``
-    bounds. Returns messages published."""
-    return _publish_all(prepare(batch_df).toArrow().to_batches(), publisher)
+    one Arrow collect (one job, no Python worker), as one batch (the
+    kernel's cost is mostly per batch), and publishes in row order. The
+    driver holds one micro-batch, which ``maxFilesPerTrigger`` bounds.
+    Returns messages published."""
+    table = prepare(batch_df).toArrow().combine_chunks()
+    return _publish_all(table.to_batches(), publisher)
 
 
 def publish_batch_partitioned(batch_df: DataFrame, publisher_factory,

@@ -7,7 +7,8 @@
 * the ``mapInArrow`` encoder survives null ladder levels and null
   liquidity, and its executed plan holds one ``from_json``.
 * the frames published for ``tests/data/ticks.ndjson`` are pinned byte
-  for byte.
+  for byte, and those of a generated capture equal, as a multiset, the
+  per-message ``wire`` encoders' over the same prepared rows.
 """
 
 from __future__ import annotations
@@ -15,8 +16,10 @@ from __future__ import annotations
 import glob
 import hashlib
 import json
+import random
 import re
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -26,10 +29,12 @@ from oanda_stream_processor_spark.functions.ticks import (
 from oanda_stream_processor_spark.proto import wire_decode as wd
 from oanda_stream_processor_spark.schemas import HEARTBEAT, PRICE_TICK
 from oanda_stream_processor_spark.sources.ndjson import read_tick_lines
-from oanda_stream_processor_spark.streaming.encode import encode_stream
+from oanda_stream_processor_spark.streaming.encode import (
+    encode_stream, prepare)
 from oanda_stream_processor_spark.streaming.sinks import (
     PartitionedFilePublisherFactory, publish_batch,
     publish_batch_partitioned)
+from tests.test_encode_kernel import reference
 
 ROUTED = ["message_type", "price_tick", "heartbeat", "raw", "spread",
           "event_ts"]
@@ -170,7 +175,11 @@ def test_encoder_survives_null_levels_and_liquidity(spark):
     lines = [_tick(asks=[None], instrument="NULL_LEVEL"),
              _tick(bids=[{"price": "1.0"}, {"price": "0.9", "liquidity": "x"}],
                    instrument="NULL_LIQUIDITY"),
-             _tick(instrument="EUR_USD", time="1969-07-20T20:17:40.25Z")]
+             _tick(instrument="EUR_USD", time="1969-07-20T20:17:40.25Z"),
+             # from 2^53 µs (2255-06-05) on, a double split of the µs
+             # rounds the seconds up
+             _tick(instrument="FAR", time="2300-01-01T00:00:00.999999Z"),
+             _tick(instrument="END", time="9999-12-31T23:59:59.999999Z")]
     df = spark.createDataFrame([(ln,) for ln in lines],
                                "value string").coalesce(1)
     derived = derive_tick_columns(route(df))
@@ -186,7 +195,9 @@ def test_encoder_survives_null_levels_and_liquidity(spark):
         "NULL_LEVEL": ([("", 0)], [("1.0", 5)], *t),
         "NULL_LIQUIDITY": ([("1.1", 7)], [("1.0", 0), ("0.9", 0)], *t),
         # before 1970 the seconds go down and the nanos stay positive
-        "EUR_USD": ([("1.1", 7)], [("1.0", 5)], -14_182_940, 250_000_000)}
+        "EUR_USD": ([("1.1", 7)], [("1.0", 5)], -14_182_940, 250_000_000),
+        "FAR": ([("1.1", 7)], [("1.0", 5)], 10_413_792_000, 999_999_000),
+        "END": ([("1.1", 7)], [("1.0", 5)], 253_402_300_799, 999_999_000)}
 
     class Recorder:
         def __init__(self):
@@ -196,7 +207,7 @@ def test_encoder_survives_null_levels_and_liquidity(spark):
             self.payloads.append(payload)
 
     rec = Recorder()
-    assert publish_batch(derived, rec) == 3
+    assert publish_batch(derived, rec) == 5
     assert rec.payloads == [bytes(r.payload) for r in encoded]
 
 
@@ -242,3 +253,52 @@ def test_published_frames_are_pinned(spark, tick_capture, tmp_path):
               for f in wd.iter_frames(open(p, "rb").read())]
     assert len(frames) == 4
     assert _digest(frames) == TICKS_FRAMES_SHA256
+
+
+def _random_line(rng: random.Random, i: int) -> str:
+    """A capture line: mostly ticks with 0-5 levels a side, some of them
+    odd; heartbeats, Unknown, blank and malformed lines."""
+    t = (f"{rng.choice([1969, 2026, 2026, 2026])}-08-13T09:"
+         f"{i // 60 % 60:02d}:{i % 60:02d}.{rng.randrange(10**6):06d}Z")
+    r = rng.random()
+    if r < 0.02:
+        return json.dumps({"type": "HEARTBEAT", "time": t})
+    if r < 0.03:
+        return json.dumps({"type": "MAINTENANCE", "time": t})
+    if r < 0.04:
+        return rng.choice(["", "  ", '{"type":"PRICE","time":'])
+
+    def level():
+        if rng.random() < 0.02:
+            return rng.choice([None, {"price": "1.0"}])
+        return {"price": f"{rng.uniform(0, 200):.{rng.randrange(7)}f}",
+                "liquidity": rng.choice([0, -5, 127, 128, 10**6,
+                                         rng.randrange(2**40)])}
+
+    def ladder():
+        return [level() for _ in range(rng.randrange(6))]
+
+    return _tick(time=t, asks=ladder(), bids=ladder(),
+                 instrument=rng.choice(["EUR_USD", "USD_JPY", "", "日本_€"]),
+                 closeoutAsk=f"{rng.uniform(0, 2):.5f}")
+
+
+@pytest.mark.slow
+def test_partitioned_frames_equal_the_wire_reference(spark, tmp_path):
+    rng = random.Random(20)
+    capture = tmp_path / "capture.ndjson"
+    capture.write_text("\n".join(_random_line(rng, i)
+                                 for i in range(20_000)) + "\n")
+    derived = derive_tick_columns(
+        route(nonblank_lines(read_tick_lines(spark, str(capture)))))
+    base = str(tmp_path / "pub")
+    n = publish_batch_partitioned(
+        derived, PartitionedFilePublisherFactory(base))
+    parts = glob.glob(base + ".*")
+    got = sorted(f for p in parts
+                 for f in wd.iter_frames(open(p, "rb").read()))
+    want = sorted(f for b in prepare(derived).toArrow().to_batches()
+                  for _, f in reference(b))
+    assert len(parts) > 1
+    assert n == len(got) == len(want) > 19_000
+    assert got == want
