@@ -2,10 +2,9 @@
 
 Everything here is a pure Column expression over built-in functions, so the
 whole parse→route→derive chain stays in the JVM — the Spark analog of the
-reference's hand-fused event loop (main.rs:65-135), but distributed. A
-filter on the derived ``message_type`` is pushed below ``route``'s one
-parse and re-parses each line once per field it reads, so the publish
-path drops Unknown in its encoder instead (streaming/encode.py).
+reference's hand-fused event loop (main.rs:65-135), but distributed.
+``route`` parses each line once, and a filter on the derived
+``message_type`` (``publishable``) cannot split that parse.
 
 Semantic invariants reproduced (SURVEY.md §2.1):
   * blank lines skipped            (oanda_client.rs:51-53)
@@ -46,15 +45,41 @@ def route(df: DataFrame, col: str = "value") -> DataFrame:
     Each line is parsed once, over the union of the PriceTick and
     Heartbeat fields: equal to one parse per schema, since a field that
     fails to parse (a heartbeat's ``"asks":"bad"``) nulls itself alone
-    whatever ``spark.sql.json.enablePartialResults`` says (Spark 4.1). The
-    discriminator is the first ``type`` key (``from_json`` keeps the last).
+    whatever ``spark.sql.json.enablePartialResults`` says (Spark 4.1).
+
+    Validity (S3) is ``get_json_object(v, '$') IS NOT NULL``. The parse
+    decides it alone when its corrupt-record column is null: with
+    ``allowNonNumericNumbers`` off it accepts no line that
+    ``get_json_object``'s JsonFactory rejects. A corrupt line (non-JSON,
+    a non-object, a bad field, a raw tab) asks ``get_json_object``, so
+    non-object JSON stays Unknown and non-JSON is dropped.
+
+    The discriminator is the first ``type`` key. The parse keeps the
+    last, so a line that could hold two (any backslash, which may escape
+    the key, or, beside a ``HEARTBEAT``, a second ``"type"`` or a
+    single-quoted ``'type'``) reads it with
+    ``get_json_object(v, '$.type')`` instead.
+
+    Invalid lines are dropped by a generator (``inline`` of a 0- or
+    1-element array), not a ``Filter``: Catalyst pushes a filter on a
+    parsed column below the projection and parses each line again, and
+    it cannot push one below a generator, so a later filter on
+    ``message_type`` (``publishable``) does not re-parse either.
     """
-    v = F.col(col)
-    # get_json_object is null for non-JSON input: S3, malformed JSON dropped
-    parsed = df.where(F.get_json_object(v, "$").isNotNull()).select(
-        v.alias("raw"), F.from_json(v, TICK_LINE).alias("line"),
-        (F.get_json_object(v, "$.type") == "HEARTBEAT").alias("is_hb"))
-    line, is_hb = F.col("line"), F.col("is_hb")
+    parsed = df.select(F.col(col).alias("raw"), F.from_json(
+        col, TICK_LINE, {"allowNonNumericNumbers": "false"}).alias("line"))
+    raw, line = F.col("raw"), F.col("line")
+    valid = (F.when(line.isNotNull() & line["_corrupt_record"].isNull(), True)
+              .otherwise(F.get_json_object(raw, "$").isNotNull()))
+    # the parse's type is the first unless the line may hold two; where
+    # neither HEARTBEAT nor a backslash appears, both read not-HEARTBEAT
+    two_types = raw.contains("\\") | (raw.contains("HEARTBEAT") & (
+        raw.contains("'type'") | raw.rlike('(?s)"type".*"type"')))
+    is_hb = F.when(two_types, F.get_json_object(raw, "$.type")).otherwise(
+        line["type"]) == "HEARTBEAT"
+    parsed = parsed.select(F.inline(F.when(valid, F.array(F.struct(
+        raw, line, is_hb.alias("is_hb"))))))
+    is_hb = F.col("is_hb")
     pt = F.struct(*[line[f].alias(f) for f in PRICE_TICK.fieldNames()])
     hb = F.struct(*[line[f].alias(f) for f in HEARTBEAT.fieldNames()])
     # from_json yields null for a missing or type-mismatched field — the
@@ -130,5 +155,6 @@ def derive_tick_columns(df: DataFrame) -> DataFrame:
 def publishable(df: DataFrame) -> DataFrame:
     """Sink-boundary filter: Unknown is retained in-engine but NEVER
     published (main.rs:117-119; proto oneof is closed,
-    proto/oanda_stream.proto:27-32). Not used by the publish path."""
+    proto/oanda_stream.proto:27-32). The publish path's encoder drops
+    Unknown itself (streaming/encode.py)."""
     return df.where(F.col("message_type").isin("price_tick", "heartbeat"))

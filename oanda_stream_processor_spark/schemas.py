@@ -45,8 +45,10 @@ HEARTBEAT = T.StructType([
 ])
 
 # One tick line parsed once: PriceTick's fields plus Heartbeat's ``type``
-# (``time`` is shared); functions/ticks.route cuts both payloads from it.
-TICK_LINE = T.StructType(PRICE_TICK.fields + [HEARTBEAT["type"]])
+# (``time`` is shared) and the parse's corrupt-record column;
+# functions/ticks.route cuts both payloads from it.
+TICK_LINE = T.StructType(PRICE_TICK.fields + [
+    HEARTBEAT["type"], T.StructField("_corrupt_record", T.StringType())])
 
 # --- fixture schemas (verified against /root/testdata parquet footers) ------
 

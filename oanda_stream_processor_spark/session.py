@@ -61,6 +61,9 @@ def get_spark(app_name: str = "oanda_stream_processor_spark",
         .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(filter(None, (
             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
             os.environ.get("PYTHONPATH")))))
+        # ...and their daemon imports pyspark unzipped (daemon.py)
+        .config("spark.python.daemon.module",
+                "oanda_stream_processor_spark.daemon")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # -- scan sizing (100 TB: keep parquet splits ~128 MB) --------

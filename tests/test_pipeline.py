@@ -199,3 +199,33 @@ def test_workers_import_the_package_from_any_cwd(tick_capture, tmp_path):
                          timeout=300)
     assert res.returncode == 0, res.stderr[-2000:]
     assert "published 4" in res.stdout
+
+
+@pytest.mark.skipif(
+    not os.path.isfile(os.path.join(os.environ.get("SPARK_HOME", ""),
+                                    "python", "pyspark", "__init__.py")),
+    reason="no unzipped pyspark under $SPARK_HOME/python to import from")
+def test_workers_import_pyspark_unzipped(spark):
+    """Each Python task re-reads the directory of every zip an importer
+    covers (importlib.invalidate_caches), so the workers' daemon
+    (daemon.py) imports pyspark from $SPARK_HOME/python, and no importer
+    covers pyspark.zip or a jar."""
+    def imports(batches):
+        import zipimport
+
+        import pyarrow as pa
+        import pyspark
+        for _ in batches:
+            pass
+        zips = [p for p, imp in sys.path_importer_cache.items()
+                if isinstance(imp, zipimport.zipimporter)]
+        yield pa.RecordBatch.from_pydict(
+            {"pyspark": [pyspark.__file__], "zips": [zips]})
+
+    row = spark.range(1).coalesce(1).mapInArrow(
+        imports, "pyspark string, zips array<string>").first()
+    home = os.path.join(os.environ["SPARK_HOME"], "python")
+    assert os.path.realpath(row.pyspark) == os.path.realpath(
+        os.path.join(home, "pyspark", "__init__.py"))
+    assert not [p for p in row.zips
+                if "pyspark.zip" in p or p.endswith(".jar") or ".jar/" in p]

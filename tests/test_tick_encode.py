@@ -5,7 +5,9 @@
   one-parse-per-schema expression, kept here as the oracle it must match
   row for row.
 * the ``mapInArrow`` encoder survives null ladder levels and null
-  liquidity, and its executed plan holds one ``from_json``.
+  liquidity, and its executed plan holds one ``from_json`` and no
+  ``get_json_object`` outside a CASE branch, with or without a filter
+  on ``message_type`` (``publishable``, q60, q61).
 * the frames published for ``tests/data/ticks.ndjson`` are pinned byte
   for byte, and those of a generated capture equal, as a multiset, the
   per-message ``wire`` encoders' over the same prepared rows.
@@ -25,7 +27,9 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from oanda_stream_processor_spark.functions.ticks import (
-    derive_tick_columns, nonblank_lines, route)
+    derive_tick_columns, nonblank_lines, publishable, route)
+from oanda_stream_processor_spark.operators.ticks import (
+    q60_tick_pipeline, q61_tick_spread_stats)
 from oanda_stream_processor_spark.proto import wire_decode as wd
 from oanda_stream_processor_spark.schemas import HEARTBEAT, PRICE_TICK
 from oanda_stream_processor_spark.sources.ndjson import read_tick_lines
@@ -74,7 +78,9 @@ def route_separate_parses(df, col: str = "value"):
 def _routed(spark, lines, route_fn):
     df = spark.createDataFrame([(ln,) for ln in lines], "value string")
     out = derive_tick_columns(route_fn(nonblank_lines(df))).select(ROUTED)
-    return out.schema, sorted(out.collect(), key=repr)
+    # event_ts as µs: a year before 1 ("time": -1728) has no datetime
+    rows = out.withColumn("event_ts", F.unix_micros("event_ts")).collect()
+    return out.schema, sorted(rows, key=repr)
 
 
 def _assert_routes_agree(spark, lines):
@@ -93,6 +99,9 @@ TICK = {"type": "PRICE", "time": "2026-08-13T09:15:01.5Z",
 
 def _tick(**kw) -> str:
     return json.dumps({**TICK, **kw}, ensure_ascii=False)
+
+
+HB_X = '{"type":"HEARTBEAT","time":"2026-08-13T00:00:00Z","x":%s}'
 
 
 ADVERSARIAL = [
@@ -117,6 +126,22 @@ ADVERSARIAL = [
     _tick(closeoutAsk=1.5, status=None), _tick(closeoutBid="N/A"),
     json.dumps({k: v for k, v in TICK.items() if k != "type"}),
     "", "   ",
+    # where the parse and get_json_object could disagree: tokens only
+    # the parse accepts by default, keys only get_json_object reads first
+    HB_X % "NaN", HB_X % "-Infinity", HB_X % "+INF",
+    _tick().replace('"1.1"', "Infinity", 1),
+    "{'type':'HEARTBEAT','time':'2026-08-13T00:00:00Z'}",
+    "{\"type\":\"HEARTBEAT\",'type':'X','time':'2026-08-13T00:00:00Z'}",
+    "{'type':'X',\"type\":\"HEARTBEAT\",\"time\":\"2026-08-13T00:00:00Z\"}",
+    '{"\\u0074ype":"X","type":"HEARTBEAT","time":"2026-08-13T00:00:00Z"}',
+    '{"type":"HEARTBEAT","\\u0074ype":"X","time":"2026-08-13T00:00:00Z"}',
+    '{"type":"HEART\\u0042EAT","time":"2026-08-13T00:00:00Z"}',
+    HB_X % '"type"', '{"x":"type","type":"X","time":"2026-08-13T00:00:00Z"}',
+    '{"o":{"type":"HEARTBEAT"},"type":"X","time":"2026-08-13T00:00:00Z"}',
+    HB_X % '"a\tb"', _tick().replace("EUR_USD", "EUR\tUSD"),
+    _tick() + " x", _tick() + "}", HB_X % "1" + " x",
+    HB_X % "01", _tick().replace("5}", "05}", 1),
+    HB_X % "1e999", _tick().replace("5}", "1e999}", 1),
 ]
 
 
@@ -141,7 +166,7 @@ def test_bad_tick_field_keeps_the_heartbeat(spark):
 
 _scalar = st.one_of(
     st.none(), st.booleans(), st.integers(-2**70, 2**70),
-    st.floats(allow_nan=False, allow_infinity=False),
+    st.floats(),  # json.dumps writes NaN, Infinity and -Infinity bare
     st.text(max_size=8),
     st.sampled_from(["HEARTBEAT", "PRICE", "2026-08-13T09:15:01Z",
                      "2026-08-13T09:15:01.123456789Z",
@@ -157,10 +182,24 @@ _line_obj = st.fixed_dictionaries({}, optional={
     "bids": _ladder, "asks": _ladder, "extra": _scalar})
 
 
+# members json.dumps cannot write, each of which the parse and
+# get_json_object could read differently
+_raw_member = st.sampled_from([
+    '"n": 01', '"n": 1e999', '"bids": [{"price": "1", "liquidity": 1e999}]',
+    '"x": "a\tb"', '"x": "type"', '"type": "HEARTBEAT"', '"type": "X"',
+    "'type': 'HEARTBEAT'", "'x': 'type'", '"\\u0074ype": "HEARTBEAT"',
+    '"type": "HEART\\u0042EAT"'])
+
+
 @st.composite
 def _lines(draw):
     obj = draw(_line_obj)
     line = json.dumps(obj, ensure_ascii=draw(st.booleans()))
+    for member in draw(st.lists(_raw_member, max_size=2)):
+        sep = ", " if line != "{}" else ""
+        line = draw(st.sampled_from([
+            "{" + member + sep + line[1:], line[:-1] + sep + member + "}"]))
+    line += draw(st.sampled_from(["", "", " x", "}"]))
     cut = draw(st.one_of(st.none(), st.integers(0, len(line))))
     return line if cut is None else line[:cut]
 
@@ -211,25 +250,66 @@ def test_encoder_survives_null_levels_and_liquidity(spark):
     assert rec.payloads == [bytes(r.payload) for r in encoded]
 
 
+_PROBE_SCOPE = re.compile(
+    r"\bCASE WHEN\b|\b(?:WHEN|THEN|ELSE|END)\b|get_json_object\(")
+
+
+def _unconditional_probes(node: str) -> int:
+    """The ``get_json_object`` calls a plan node makes on every row: all
+    of a Filter's, and elsewhere those outside every CASE's branches
+    (its THEN and ELSE values and its later WHEN conditions)."""
+    if re.match(r"[\s+\-:*()\d]*Filter ", node):
+        return node.count("get_json_object(")
+    n, cases = 0, []  # per open CASE: past its first condition yet?
+    for tok in _PROBE_SCOPE.findall(node):
+        if tok == "CASE WHEN":
+            cases.append(False)
+        elif tok == "END":
+            cases.pop()
+        elif tok != "get_json_object(":
+            cases[-1] = True
+        elif not any(cases):
+            n += 1
+    return n
+
+
 def _plan_counts(df) -> tuple[int, int, int]:
-    """(from_json, get_json_object, Python nodes) in the executed plan;
-    a scan's pushed-filter listing repeats its Filter and is skipped."""
+    """(from_json, unconditional get_json_object, Python nodes) in the
+    executed plan; a scan's pushed-filter listing repeats its Filter
+    and is skipped."""
     plan = df._jdf.queryExecution().executedPlan().toString()
     nodes = [ln for ln in plan.splitlines() if "Scan " not in ln]
-    text = "\n".join(nodes)
     python = [ln for ln in nodes
               if re.search(r"MapIn(Arrow|Pandas)|EvalPython|InPandas", ln)]
-    return (text.count("from_json("), text.count("get_json_object("),
-            len(python))
+    return (sum(ln.count("from_json(") for ln in nodes),
+            sum(map(_unconditional_probes, nodes)), len(python))
+
+
+def test_probe_scope_reads_case_branches():
+    probe = "get_json_object(raw#2, $)"
+    assert _unconditional_probes(f"+- *(2) Filter isnotnull({probe})") == 1
+    assert _unconditional_probes(f"Project [({probe} = X) AS is_hb#7]") == 1
+    assert _unconditional_probes(
+        f"Project [CASE WHEN isnotnull({probe}) THEN 1 END AS k#1]") == 1
+    assert _unconditional_probes(
+        f"Generate inline(CASE WHEN CASE WHEN a THEN true ELSE {probe} END "
+        f"THEN array(CASE WHEN b THEN {probe} ELSE c END) END)") == 0
 
 
 def test_publish_plan_parses_each_line_once(spark, tick_capture):
     derived = derive_tick_columns(
         route(nonblank_lines(read_tick_lines(spark, tick_capture))))
-    n_parse, n_probe, n_python = _plan_counts(encode_stream(derived))
-    assert n_parse == 1
-    assert n_probe <= 2
-    assert n_python == 1
+    assert _plan_counts(encode_stream(derived)) == (1, 0, 1)
+
+
+def test_message_type_filter_does_not_reparse(spark, tick_capture):
+    """``route`` drops invalid lines with a generator, so a filter on
+    ``message_type`` cannot be pushed below its parse and split it."""
+    derived = derive_tick_columns(
+        route(nonblank_lines(read_tick_lines(spark, tick_capture))))
+    assert _plan_counts(encode_stream(publishable(derived))) == (1, 0, 1)
+    for q in (q60_tick_pipeline, q61_tick_spread_stats):
+        assert _plan_counts(q(spark, "")) == (1, 0, 0)
 
 
 # sha256 over the sorted, length-prefixed frames published for

@@ -276,6 +276,20 @@ def main() -> int:
     q78 = llmprep.q78_vocab_topk(spark, SF)
     check("q78 take-ordered", q78, contains=["TakeOrderedAndProject"])
 
+    # q60/q61: one from_json per capture line. route drops invalid lines
+    # with a generator, so their filters on message_type cannot be
+    # pushed below the parse and split it into one parse per field.
+    # (formatted explain omits a Project's expressions: count them in
+    # the executed plan's tree string)
+    from oanda_stream_processor_spark.operators import ticks
+    for q in (ticks.q60_tick_pipeline, ticks.q61_tick_spread_stats):
+        name = q.__name__.split("_")[0]
+        n = (q(spark, SF)._jdf.queryExecution().executedPlan().toString()
+             .count("from_json("))
+        if n != 1:
+            failures.append(f"{name}: {n} from_json in the executed plan")
+        print(("FAIL " if n != 1 else "ok   ") + f"{name} one json parse")
+
     # round-5 incremental family
     from oanda_stream_processor_spark.operators import asof, increment
 
